@@ -2,6 +2,8 @@ package graft.lineage
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutorService, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
@@ -43,15 +45,54 @@ import org.apache.spark.sql.SparkSession
   * drops fully-superseded runs, and `POST /openlineage` exports the
   * open wire format (idempotent name-UUID runId).
   *
-  * Concurrency: requests serialize through one executor thread.
-  * Lineage parses touch only the analyzer (no Spark jobs), so a
-  * request is milliseconds; the serialization also keeps the
-  * `USE db` threading per-request rather than cross-request.
+  * Concurrency: two lanes. The parse endpoints (`/fetch`, `/impact`,
+  * `/column-impact`, `/openlineage`, `/health`) run on a fixed pool
+  * with one thread per core: a parse touches only the analyzer, which
+  * is safe to share across threads, and `USE db` threads through each
+  * request's own statements, never through the session. Every store
+  * endpoint is handed to one store lane thread, so store operations
+  * still run one at a time, in arrival order, under the same
+  * lease/claim model; a long compaction holds up other store requests
+  * but no parse. Responses go out with TCP_NODELAY (see
+  * [[createServer]]), so a delayed-ACK client sees no ~40 ms stall
+  * between headers and body. A request body is read up to
+  * [[MaxRequestBytes]]; a larger one gets a named 413.
   *
   * `start(port = 0)` binds an ephemeral port (tests);
   * `server.getAddress.getPort` reports the bound port. Callers own the
-  * lifecycle: `server.stop(0)` when done. */
+  * lifecycle: `server.stop(0)` when done. Both lanes run on daemon
+  * threads (`graft-lineage-parse-N`, `graft-lineage-store`) that exit
+  * once idle, so a stopped service holds no thread that keeps the JVM
+  * alive. */
 object LineageService {
+
+  /** The largest request body the service reads, in bytes. */
+  private[lineage] val MaxRequestBytes: Int = 16 * 1024 * 1024
+
+  /** Every graft `HttpServer` is created here. The JDK reads
+    * `sun.net.httpserver.nodelay` once, when the first server in the
+    * JVM is made, and the default leaves Nagle's algorithm on: the
+    * response body then waits for the client's ACK of the headers,
+    * ~40 ms with a delayed-ACK client. So the property is set to true
+    * before any server exists, unless the JVM already set it. */
+  private[lineage] def createServer(host: String, port: Int): HttpServer = {
+    System.getProperties.putIfAbsent("sun.net.httpserver.nodelay", "true")
+    HttpServer.create(new InetSocketAddress(host, port), 0)
+  }
+
+  /** `threads` daemon threads named `name(i)`, fed from an unbounded
+    * queue; a thread idle for a minute exits. */
+  private def lane(threads: Int, name: Int => String): ExecutorService = {
+    val made = new AtomicInteger()
+    val pool = new ThreadPoolExecutor(threads, threads, 1, TimeUnit.MINUTES,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, name(made.getAndIncrement()))
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
 
   def start(spark: SparkSession, port: Int = 0,
             metadata: Option[MetadataProvider] = None,
@@ -71,15 +112,18 @@ object LineageService {
     val tok = token.orElse(
       spark.conf.getOption("spark.graft.lineage.token"))
       .filter(_.nonEmpty)
-    // local shadows thread the token through every handler without
-    // touching the fifteen call sites below
-    def guarded(ex: HttpExchange)(body: => Unit): Unit =
-      LineageService.guardedAuth(ex, tok)(body)
+    // every store endpoint goes through this one wrapper: the exchange
+    // is handed to the single store-lane thread, which checks the
+    // token and runs the handler there, one store request at a time
+    val storeLane = lane(1, _ => "graft-lineage-store")
+    def onStore(ex: HttpExchange)(body: => Unit): Unit =
+      storeLane.execute(() => LineageService.guardedAuth(ex, tok)(body))
+    // local shadow threads the token through the parse handlers
     def handle(spark: SparkSession, metadata: Option[MetadataProvider],
                ex: HttpExchange,
                render: (String, Seq[LineageResult]) => String): Unit =
       LineageService.handleAuth(spark, metadata, ex, render, tok)
-    val server = HttpServer.create(new InetSocketAddress(host, port), 0)
+    val server = createServer(host, port)
     // STORE-BACKED tier (r17): with a LineageStore directory the
     // service is a durable lineage BACKEND, not just a parser —
     // POST /runs/<id> parses the body and appends it as that run;
@@ -87,7 +131,7 @@ object LineageService {
     // the store's accumulated graph (see LineageStore for the scale
     // shapes: per-run partition pruning, broadcast snapshot resolve).
     store.foreach { dir =>
-      server.createContext("/runs", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/runs", (ex: HttpExchange) => onStore(ex) {
         val path = ex.getRequestURI.getPath
         (ex.getRequestMethod, path.stripPrefix("/runs")) match {
           case ("GET", "" | "/") =>
@@ -119,31 +163,31 @@ object LineageService {
               if sub.matches("/\\d+") &&
                 sub.stripPrefix("/").toLongOption.isDefined =>
             val runId = sub.stripPrefix("/").toLong
-            val sql = new String(ex.getRequestBody.readAllBytes(),
-              StandardCharsets.UTF_8)
-            if (sql.trim.isEmpty)
-              respond(ex, 400, """{"error":"empty body"}""")
-            // runTaken, not runs(): a vacuumed-but-unpurged or
-            // claim-reserved id must 409 like any other conflict, not
-            // fall through to append's require as a raw 400
-            else if (LineageStore.runTaken(spark, dir, runId))
-              respond(ex, 409,
-                s"""{"error":"run $runId already exists"}""")
-            else try {
-              val results = LineageParser.parse(spark, sql, metadata)
-              LineageStore.append(spark, dir, runId,
-                LineageParser.toDataset(spark, results))
-              respond(ex, 200, s"""{"run":$runId,"edges":${
-                results.map(_.colLines.size).sum}}""")
-            } catch { case e: Exception =>
-              respond(ex, 400, s"""{"error":${jstr(
-                Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
+            readBody(ex).foreach { sql =>
+              if (sql.trim.isEmpty)
+                respond(ex, 400, """{"error":"empty body"}""")
+              // runTaken, not runs(): a vacuumed-but-unpurged or
+              // claim-reserved id must 409 like any other conflict, not
+              // fall through to append's require as a raw 400
+              else if (LineageStore.runTaken(spark, dir, runId))
+                respond(ex, 409,
+                  s"""{"error":"run $runId already exists"}""")
+              else try {
+                val results = LineageParser.parse(spark, sql, metadata)
+                LineageStore.append(spark, dir, runId,
+                  LineageParser.toDataset(spark, results))
+                respond(ex, 200, s"""{"run":$runId,"edges":${
+                  results.map(_.colLines.size).sum}}""")
+              } catch { case e: Exception =>
+                respond(ex, 400, s"""{"error":${jstr(
+                  Option(e.getMessage).getOrElse(e.getClass.getName))}}""")
+              }
             }
           case _ => respond(ex, 405,
             """{"error":"GET /runs or POST /runs/<id> with SQL body"}""")
         }
       })
-      server.createContext("/snapshot", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/snapshot", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "GET")
           respond(ex, 405, """{"error":"use GET"}""")
         else if (LineageStore.runStats(spark, dir)._1 == 0)
@@ -166,7 +210,7 @@ object LineageService {
             maxResponseEdges, withRun = true)
         }
       })
-      server.createContext("/diff", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/diff", (ex: HttpExchange) => onStore(ex) {
         val params = queryParams(ex)
         (params.get("from").flatMap(_.toLongOption),
           params.get("to").flatMap(_.toLongOption)) match {
@@ -183,7 +227,7 @@ object LineageService {
             """{"error":"need ?from=<run>&to=<run>"}""")
         }
       })
-      server.createContext("/vacuum", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/vacuum", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "POST")
           respond(ex, 405, """{"error":"use POST"}""")
         else respond(ex, 200, LineageStore.vacuum(spark, dir)
@@ -192,7 +236,7 @@ object LineageService {
       // maintenance face of the two-phase vacuum and the capture-log
       // reclamation story (r18): purge aged-out tombstones, fold old
       // runs into a consolidated segment
-      server.createContext("/purge", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/purge", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "POST")
           respond(ex, 405, """{"error":"use POST"}""")
         else {
@@ -206,7 +250,7 @@ object LineageService {
               .map(jstr).mkString("""{"purged":[""", ",", "]}"))
         }
       })
-      server.createContext("/compact", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/compact", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "POST")
           respond(ex, 405, """{"error":"use POST"}""")
         else queryParams(ex).get("upTo").flatMap(_.toLongOption) match {
@@ -221,14 +265,14 @@ object LineageService {
       // one-directory-per-flush batches; apply the recency retention
       // an access log exists under
       server.createContext("/compact-reads", (ex: HttpExchange) =>
-        guarded(ex) {
+        onStore(ex) {
           if (ex.getRequestMethod != "POST")
             respond(ex, 405, """{"error":"use POST"}""")
           else respond(ex, 200, s"""{"folded":${
             LineageStore.compactReads(spark, dir)}}""")
         })
       server.createContext("/vacuum-reads", (ex: HttpExchange) =>
-        guarded(ex) {
+        onStore(ex) {
           if (ex.getRequestMethod != "POST")
             respond(ex, 405, """{"error":"use POST"}""")
           else queryParams(ex).get("olderThanMs")
@@ -245,7 +289,7 @@ object LineageService {
       // is the only thing standing between maintenance and an append
       // that is merely slow
       server.createContext("/vacuum-claims", (ex: HttpExchange) =>
-        guarded(ex) {
+        onStore(ex) {
           if (ex.getRequestMethod != "POST")
             respond(ex, 405, """{"error":"use POST"}""")
           else queryParams(ex).get("olderThanMs")
@@ -261,7 +305,7 @@ object LineageService {
       // table" (optionally ?table=-scoped), and the deprecation join —
       // every written table with its read recency, zeros for the
       // written-but-never-read candidates (the q287 shape).
-      server.createContext("/reads", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/reads", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "GET")
           respond(ex, 405, """{"error":"use GET"}""")
         else {
@@ -284,7 +328,7 @@ object LineageService {
               r.getLong(3)}}""").mkString("[", ",", "]"))
         }
       })
-      server.createContext("/deprecation", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/deprecation", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "GET")
           respond(ex, 405, """{"error":"use GET"}""")
         else if (LineageStore.runStats(spark, dir)._1 == 0)
@@ -313,7 +357,7 @@ object LineageService {
       // The impact questions over WHAT ACTUALLY RAN: same rollups as
       // the POST-the-SQL endpoints, computed over the store's current
       // snapshot instead of a request body.
-      server.createContext("/store-impact", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/store-impact", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "GET")
           respond(ex, 405, """{"error":"use GET"}""")
         else if (LineageStore.runStats(spark, dir)._1 == 0)
@@ -323,7 +367,7 @@ object LineageService {
           Seq("srcTable", "nEdges", "nDestCols", "nStatements")))
       })
       server.createContext("/store-column-impact", (ex: HttpExchange) =>
-        guarded(ex) {
+        onStore(ex) {
           if (ex.getRequestMethod != "GET")
             respond(ex, 405, """{"error":"use GET"}""")
           else if (LineageStore.runStats(spark, dir)._1 == 0)
@@ -336,7 +380,7 @@ object LineageService {
       // The graph itself, renderable: Graphviz DOT of the snapshot at
       // TABLE grain (sink <- source per statement, deduped, sorted —
       // deterministic output, the shape lineage UIs draw).
-      server.createContext("/graph.dot", (ex: HttpExchange) => guarded(ex) {
+      server.createContext("/graph.dot", (ex: HttpExchange) => onStore(ex) {
         if (ex.getRequestMethod != "GET")
           respond(ex, 405, """{"error":"use GET"}""")
         else {
@@ -373,7 +417,7 @@ object LineageService {
     // Deployability: what a load balancer and an operator ask first.
     // Reports the edge-contract version and (when store-backed) the
     // run population, from partition listings only — no data read.
-    server.createContext("/health", (ex: HttpExchange) => guarded(ex) {
+    server.createContext("/health", (ex: HttpExchange) => guardedAuth(ex, tok) {
       val runsPart = store.map { dir =>
         // range-aware stats: one listing + the manifest header, never
         // an id-per-run expansion. capture_errors: appends the
@@ -411,7 +455,8 @@ object LineageService {
             schemaOf = t => meta.tableColumns(t))
             .mkString("[", ",", "]"))
       })
-    server.setExecutor(java.util.concurrent.Executors.newSingleThreadExecutor())
+    server.setExecutor(lane(Runtime.getRuntime.availableProcessors(),
+      i => s"graft-lineage-parse-$i"))
     server.start()
     server
   }
@@ -444,9 +489,7 @@ object LineageService {
       if (!authorized(ex, token)) unauthorized(ex)
       else if (ex.getRequestMethod != "POST") respond(ex, 405,
         """{"error":"use POST with the raw SQL as the request body"}""")
-      else {
-        val sql = new String(ex.getRequestBody.readAllBytes(),
-          StandardCharsets.UTF_8)
+      else readBody(ex).foreach { sql =>
         if (sql.trim.isEmpty) respond(ex, 400, """{"error":"empty body"}""")
         else {
           val body =
@@ -462,6 +505,18 @@ object LineageService {
         }
       }
     } finally ex.close()
+  }
+
+  /** The request body as UTF-8, read up to [[MaxRequestBytes]]. A
+    * larger body is refused with a named 413, the request-side twin of
+    * the response cap, and yields None. */
+  private def readBody(ex: HttpExchange): Option[String] = {
+    val bytes = ex.getRequestBody.readNBytes(MaxRequestBytes + 1)
+    if (bytes.length > MaxRequestBytes) {
+      respond(ex, 413, s"""{"error":"request body exceeds $MaxRequestBytes """ +
+        """bytes; split the statements across requests"}""")
+      None
+    } else Some(new String(bytes, StandardCharsets.UTF_8))
   }
 
   /** `/impact`: the q126 rollup over the POSTed statements' edges. */

@@ -1267,19 +1267,34 @@ object LineageStore {
   }
 
   /** Daemon heartbeat renewing `holder`'s lease every `intervalMs`
-    * until interrupted. */
+    * until interrupted. An interrupt waits out a renewal in progress:
+    * the rewrite truncates the lease before writing it, so an
+    * interrupt landing inside it (Hadoop's local `create` runs an
+    * interruptible chmod) would leave a blank lease that reads as held
+    * for the default lease length, and that the release then fails to
+    * recognise as ours. */
   private[lineage] def startRenewal(spark: SparkSession,
                                     storeDir: String, holder: String,
                                     op: String, leaseMs: Long,
                                     intervalMs: Long): Thread = {
-    val t = new Thread(() => {
-      try {
-        while (true) {
-          Thread.sleep(intervalMs)
-          renewMaintenance(spark, storeDir, holder, op, leaseMs)
-        }
-      } catch { case _: InterruptedException => () }
-    }, "graft-lineage-lease-renewal")
+    val renewing = new Object
+    val t = new Thread("graft-lineage-lease-renewal") {
+      @volatile private var stopped = false
+      override def run(): Unit =
+        try {
+          while (true) {
+            Thread.sleep(intervalMs)
+            renewing.synchronized {
+              if (!stopped)
+                renewMaintenance(spark, storeDir, holder, op, leaseMs)
+            }
+          }
+        } catch { case _: InterruptedException => () }
+      override def interrupt(): Unit = renewing.synchronized {
+        stopped = true
+        super.interrupt()
+      }
+    }
     t.setDaemon(true)
     t.start()
     t

@@ -23,17 +23,44 @@ trait MetadataProvider {
   * view name. Only `AnalysisException` (unknown/unresolvable table)
   * degrades to Nil — genuine catalog failures (a broken metastore
   * connection, a corrupt table definition) propagate rather than
-  * silently downgrading lineage to the ordinal-only path. */
+  * silently downgrading lineage to the ordinal-only path.
+  *
+  * A name the session catalog does not know (every INSERT into a new
+  * sink) is answered from a catalog existence check, not by building
+  * and failing a DataFrame: that costs an analysis and an exception,
+  * several milliseconds a lookup. */
 final class CatalogMetadataProvider(spark: SparkSession) extends MetadataProvider {
   import org.apache.spark.sql.AnalysisException
+  import org.apache.spark.sql.catalyst.TableIdentifier
+
   def tableColumns(table: String): Seq[String] = {
-    def fields(n: String) = spark.table(n).schema.map(_.name).toSeq
-    try fields(table)
-    catch {
-      case _: AnalysisException =>
-        val bare = table.split('.').last
-        try fields(bare) catch { case _: AnalysisException => Nil }
-    }
+    def fields(n: String): Option[Seq[String]] =
+      try
+        if (mayExist(n)) Some(spark.table(n).schema.map(_.name).toSeq)
+        else None
+      catch { case _: AnalysisException => None }
+    fields(table).orElse(fields(table.split('.').last)).getOrElse(Nil)
+  }
+
+  /** False only where the session catalog itself says `name` is
+    * neither a temp view nor a table, which is exactly when
+    * `spark.table(name)` fails analysis. Names another catalog may
+    * resolve (three parts, a registered catalog's prefix, any name
+    * while a non-session catalog is current) answer true, leaving the
+    * verdict to `spark.table`. An unparsable name throws the same
+    * `AnalysisException` `spark.table` would. */
+  private def mayExist(name: String): Boolean = {
+    val state = spark.sessionState
+    val parts = state.sqlParser.parseMultipartIdentifier(name)
+    def known(id: TableIdentifier) =
+      state.catalog.isTempView(parts) || state.catalog.tableExists(id)
+    state.catalogManager.currentCatalog.name != "spark_catalog" ||
+      (parts match {
+        case Seq(t) => known(TableIdentifier(t))
+        case Seq(db, t) if !state.catalogManager.isCatalogRegistered(db) =>
+          known(TableIdentifier(t, Some(db)))
+        case _ => true
+      })
   }
 }
 

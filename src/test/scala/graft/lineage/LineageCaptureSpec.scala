@@ -245,8 +245,7 @@ class LineageCaptureSpec extends SparkTestBase {
       .createTempDirectory("graft_cap_ol_out").toString
     // stub collector: records every POSTed body
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val collector = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val collector = LineageService.createServer("127.0.0.1", 0)
     collector.createContext("/api/v1/lineage",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         events.add(new String(ex.getRequestBody.readAllBytes(),
@@ -308,8 +307,7 @@ class LineageCaptureSpec extends SparkTestBase {
     val out = java.nio.file.Files
       .createTempDirectory("graft_cap_ol_bound_out").toString
     val events = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val collector = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val collector = LineageService.createServer("127.0.0.1", 0)
     collector.createContext("/api/v1/lineage",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         events.add(new String(ex.getRequestBody.readAllBytes(),

@@ -1,7 +1,11 @@
 package graft.lineage
 
-import java.net.URI
+import java.net.{HttpURLConnection, URI}
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets
+import java.util.concurrent.{CompletableFuture, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 
@@ -9,16 +13,39 @@ import graft.SparkTestBase
   * POST raw SQL to /fetch over real HTTP, get the edge list as JSON. */
 class LineageServiceSpec extends SparkTestBase {
 
+  private def request(port: Int, body: String,
+                      method: String = "POST",
+                      path: String = "/fetch",
+                      bearer: Option[String] = None): HttpRequest = {
+    // the timeout only turns a wedged lane into a failure, not a hang
+    val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
+      .method(method, HttpRequest.BodyPublishers.ofString(body))
+      .timeout(java.time.Duration.ofSeconds(120))
+    bearer.foreach(t => b.header("Authorization", s"Bearer $t"))
+    b.build()
+  }
+
   private def post(port: Int, body: String,
                    method: String = "POST",
                    path: String = "/fetch",
-                   bearer: Option[String] = None): HttpResponse[String] = {
-    val b = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port$path"))
-      .method(method, HttpRequest.BodyPublishers.ofString(body))
-    bearer.foreach(t => b.header("Authorization", s"Bearer $t"))
-    HttpClient.newHttpClient().send(b.build(),
+                   bearer: Option[String] = None): HttpResponse[String] =
+    HttpClient.newHttpClient().send(
+      request(port, body, method, path, bearer),
       HttpResponse.BodyHandlers.ofString())
-  }
+
+  /** The request sent without waiting for its response. */
+  private def postAsync(port: Int, body: String, method: String = "POST",
+                        path: String = "/fetch")
+      : CompletableFuture[HttpResponse[String]] =
+    HttpClient.newHttpClient().sendAsync(request(port, body, method, path),
+      HttpResponse.BodyHandlers.ofString())
+
+  private def nonDaemonThreads(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
 
   test("POST /fetch returns lineage edges as JSON; errors are named") {
     graft.Tables.registerAll(spark, sfDir)
@@ -189,8 +216,7 @@ class LineageServiceSpec extends SparkTestBase {
         "\"default.lineage_target.tgt_name\";"))
     } finally {
       server.stop(0)
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
+      deleteDir(dir)
     }
   }
 
@@ -248,8 +274,7 @@ class LineageServiceSpec extends SparkTestBase {
       assert(dp.contains(""""next_after_stmt":1"""))
     } finally {
       server.stop(0)
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
+      deleteDir(dir)
     }
   }
 
@@ -343,8 +368,7 @@ class LineageServiceSpec extends SparkTestBase {
         "[]")
     } finally {
       server.stop(0)
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
+      deleteDir(dir)
     }
   }
 
@@ -393,8 +417,7 @@ class LineageServiceSpec extends SparkTestBase {
         path = s"/runs/$orphan").statusCode() == 409)
     } finally {
       server.stop(0)
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
+      deleteDir(dir)
     }
   }
 
@@ -431,8 +454,7 @@ class LineageServiceSpec extends SparkTestBase {
         bearer = Some("s3cr3t")).statusCode() == 200)
     } finally {
       server.stop(0)
-      org.apache.commons.io.FileUtils
-        .deleteDirectory(new java.io.File(dir))
+      deleteDir(dir)
     }
     // loopback default with NO token: open exactly as before
     val open = LineageService.start(spark)
@@ -440,6 +462,178 @@ class LineageServiceSpec extends SparkTestBase {
       assert(post(open.getAddress.getPort,
         "SELECT n_name FROM nation").statusCode() == 200)
     } finally open.stop(0)
+  }
+
+  test("store lane: a held store request blocks later store requests, never a parse") {
+    LineageQueries.registerFixtures(spark, sfDir)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_svc_lanes").toString
+    // holds the append's sink lookup, and with it the store lane, until
+    // the test opens the latch
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val catalog = new CatalogMetadataProvider(spark)
+    val holding: MetadataProvider = (table: String) => {
+      if (table.endsWith("lane_held_sink")) {
+        entered.countDown()
+        release.await()
+      }
+      catalog.tableColumns(table)
+    }
+    val server = LineageService.start(spark, metadata = Some(holding),
+      store = Some(dir))
+    try {
+      val port = server.getAddress.getPort
+      val held = postAsync(port,
+        "INSERT INTO lane_held_sink SELECT n_name FROM nation",
+        path = "/runs/1")
+      assert(entered.await(60, TimeUnit.SECONDS))
+      val queued = postAsync(port, "", method = "GET", path = "/runs")
+      // the parse lane answers while the store lane is held
+      val fetched = post(port, "SELECT n_name FROM nation")
+      assert(fetched.statusCode() == 200)
+      assert(fetched.body().contains(""""fromName":"default.nation.n_name""""))
+      assert(post(port, "", method = "GET", path = "/health")
+        .statusCode() == 200)
+      assert(!held.isDone && !queued.isDone)
+      release.countDown()
+      assert(held.get(60, TimeUnit.SECONDS).body() == """{"run":1,"edges":1}""")
+      // the queued read ran after the held append, not beside it: it
+      // sees the run the append was still parsing when the read arrived
+      assert(queued.get(60, TimeUnit.SECONDS).body() == """{"runs":[1]}""")
+    } finally {
+      release.countDown()
+      server.stop(0)
+      deleteDir(dir)
+    }
+  }
+
+  test("parse lane: concurrent bodies answer exactly as each body alone; USE stays per request") {
+    LineageQueries.registerFixtures(spark, sfDir)
+    val server = LineageService.start(spark)
+    try {
+      // USE re-qualifies the names a request's later statements render
+      // with; one leaking across requests would rename other requests'
+      // sinks and sources, one lost inside its request its own
+      val useBodies = Seq(
+        "USE svc_lane_db; INSERT INTO lane_sink SELECT n_name FROM nation",
+        "USE svc_lane_db; SELECT n_name FROM nation; " +
+          "USE default; INSERT INTO lane_sink SELECT n_name FROM nation")
+      val corpus = LineageQueries.corpus.filter(sql =>
+        scala.util.Try(LineageParser.parse(spark, sql)).isSuccess)
+      assert(corpus.size > 30)
+      val bodies = corpus.zipWithIndex.flatMap { case (sql, i) =>
+        if (i % 4 == 0) Seq(sql, useBodies(i / 4 % 2)) else Seq(sql)
+      }
+      val alone = bodies.map(b => LineageService.toJson(LineageParser.parse(spark, b)))
+      assert(alone(bodies.indexOf(useBodies(0))).contains("svc_lane_db.lane_sink"))
+      assert(!alone(bodies.indexOf(useBodies(1))).contains("svc_lane_db.lane_sink"))
+      val port = server.getAddress.getPort
+      val clients = 4
+      val answers = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
+      val threads = (0 until clients).map { c =>
+        new Thread(() => {
+          // each client walks the bodies from its own offset, twice
+          for (k <- 0 until 2 * bodies.size) {
+            val i = (k + c * bodies.size / clients) % bodies.size
+            val r = post(port, bodies(i))
+            answers.add(i -> (if (r.statusCode() == 200) r.body()
+              else s"${r.statusCode()} ${r.body()}"))
+          }
+        })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join())
+      assert(answers.size == clients * 2 * bodies.size)
+      answers.asScala.foreach { case (i, got) =>
+        assert(got == alone(i), s"body: ${bodies(i)}")
+      }
+    } finally server.stop(0)
+  }
+
+  test("stop leaves no non-daemon service thread behind") {
+    LineageQueries.registerFixtures(spark, sfDir)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_svc_stop").toString
+    val before = nonDaemonThreads()
+    val server = LineageService.start(spark, store = Some(dir))
+    try {
+      val port = server.getAddress.getPort
+      assert(post(port, "SELECT n_name FROM nation").statusCode() == 200)
+      assert(post(port, "", method = "GET", path = "/runs").statusCode() == 200)
+      val lanes = Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName.startsWith("graft-lineage-"))
+      assert(lanes.exists(_.getName.startsWith("graft-lineage-parse-")))
+      assert(lanes.exists(_.getName == "graft-lineage-store"))
+      assert(lanes.forall(_.isDaemon))
+    } finally {
+      server.stop(0)
+      deleteDir(dir)
+    }
+    val left = nonDaemonThreads() -- before
+    assert(left.isEmpty, left.map(_.getName))
+  }
+
+  test("responses are not held back: keep-alive /fetch median under 30 ms") {
+    // A delayed-ACK client on one keep-alive connection, the OS-default
+    // ACK behaviour. Without TCP_NODELAY the body waits for the ACK of
+    // the headers, ~40 ms; a one-statement parse takes a few.
+    graft.Tables.registerAll(spark, sfDir)
+    val server = LineageService.start(spark)
+    try {
+      val url = URI.create(
+        s"http://127.0.0.1:${server.getAddress.getPort}/fetch").toURL
+      val body = "SELECT n_name FROM nation WHERE n_regionkey = 0"
+        .getBytes(StandardCharsets.UTF_8)
+      def fetchMs(): Double = {
+        val c = url.openConnection().asInstanceOf[HttpURLConnection]
+        c.setRequestMethod("POST")
+        c.setDoOutput(true)
+        val t0 = System.nanoTime()
+        val out = c.getOutputStream
+        out.write(body)
+        out.close()
+        assert(c.getResponseCode == 200)
+        val in = c.getInputStream
+        in.readAllBytes()
+        in.close() // a fully read, closed response keeps the connection
+        (System.nanoTime() - t0) / 1e6
+      }
+      (1 to 20).foreach(_ => fetchMs())
+      val ms = (1 to 20).map(_ => fetchMs()).sorted
+      val median = (ms(9) + ms(10)) / 2
+      assert(median < 30.0, ms.map(m => f"$m%.1f").mkString(" "))
+    } finally server.stop(0)
+  }
+
+  test("request bodies over the 16 MiB cap get a named 413") {
+    LineageQueries.registerFixtures(spark, sfDir)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_svc_body").toString
+    val server = LineageService.start(spark, store = Some(dir))
+    try {
+      val port = server.getAddress.getPort
+      val cap = LineageService.MaxRequestBytes
+      assert(cap == 16 * 1024 * 1024)
+      val refused = s"""{"error":"request body exceeds $cap bytes; """ +
+        """split the statements across requests"}"""
+      // exactly the cap is read whole: blanks reach the empty-body check
+      val atCap = " " * cap
+      val whole = post(port, atCap)
+      assert(whole.statusCode() == 400 &&
+        whole.body() == """{"error":"empty body"}""")
+      // one byte over is refused on both lanes, and appends nothing
+      for (path <- Seq("/fetch", "/impact", "/runs/1")) {
+        val over = post(port, atCap + "x", path = path)
+        assert(over.statusCode() == 413, path)
+        assert(over.body() == refused, path)
+      }
+      assert(post(port, "", method = "GET", path = "/runs").body() ==
+        """{"runs":[]}""")
+    } finally {
+      server.stop(0)
+      deleteDir(dir)
+    }
   }
 
   test("toJson escapes quotes and emits sorted deterministic conditions") {

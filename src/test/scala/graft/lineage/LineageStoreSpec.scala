@@ -691,6 +691,25 @@ class LineageStoreSpec extends SparkTestBase {
     }
   }
 
+  test("stopping the heartbeat at any moment leaves a lease its holder can release") {
+    withStore { dir =>
+      // a renewal every millisecond, stopped after a varying delay: an
+      // interrupt inside a renewal's rewrite must not leave a blank
+      // lease (unreleasable, held for the default length) behind
+      val rnd = new scala.util.Random(7)
+      for (i <- 1 to 40) {
+        val holder = LineageStore.acquireMaintenance(spark, dir, "op",
+          leaseMs = 60000L)
+        val hb = LineageStore.startRenewal(spark, dir, holder, "op",
+          leaseMs = 60000L, intervalMs = 1L)
+        Thread.sleep(rnd.nextInt(15).toLong)
+        hb.interrupt()
+        LineageStore.releaseMaintenance(spark, dir, holder)
+        assert(!new java.io.File(dir, "_maintain").exists(), s"round $i")
+      }
+    }
+  }
+
   test("concurrent compacts never interleave: one refuses or they serialize") {
     withStore { dir =>
       (1 to 6).foreach(i => LineageStore.append(spark, dir, i.toLong,
