@@ -30,7 +30,7 @@ object Checkpoints {
     * the resulting LogicalRDD keeps the plan's hashpartitioning
     * instead of UnknownPartitioning (AQE wraps the plan in
     * AdaptiveSparkPlanExec, from which Dataset.checkpoint extracts no
-    * partitioning — measured in PartProbe). Use on checkpoints whose
+    * partitioning — measured, DESIGN.md §5). Use on checkpoints whose
     * consumers aggregate/join on the partitioning key, so they reuse
     * the one exchange paid before the checkpoint instead of each
     * re-shuffling the materialized rows. Consumers still execute

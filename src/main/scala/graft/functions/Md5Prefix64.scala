@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the built-in chain and the DuckDB oracle mirror
   * `('0x'||substr(md5(s),1,15))::BIGINT` stays valid.
   *
-  * Measured (LshAbProbe, 2.9M char 5-grams at sf0.1): see DESIGN.md §5
+  * Measured (2.9M char 5-grams at sf0.1, 2.5 s → 1.75 s): see DESIGN.md §5
   * — this is the QDot discipline: built-ins first, a native Expression
   * only where the measurement says the built-in chain leaves real time
   * on the table.

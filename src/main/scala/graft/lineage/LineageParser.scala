@@ -71,7 +71,7 @@ object LineageParser {
     * nothing distributed to do: no data is read), but Spark supports
     * concurrent queries on one session, so a fixed pool of threads
     * shares the session and the (stateless) metadata provider.
-    * Measured: see DESIGN.md §1 (BulkParseProbe).
+    * Measured: see DESIGN.md §1, "Bulk parsing".
     *
     * Contract: statements must be SELF-CONTAINED — cross-statement
     * `USE db` threading is inherently sequential and is NOT applied

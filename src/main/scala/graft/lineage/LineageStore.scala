@@ -298,15 +298,6 @@ object LineageStore {
       !filesystem.exists(new Path(root, "_mixed"))
   }
 
-  /** Stamp a store as capture-shaped without an append — for bulk
-    * materialization in probes/tests whose layout upholds the
-    * stmt == run_id identity by construction. */
-  private[lineage] def markCaptureShaped(spark: SparkSession,
-                                         storeDir: String): Unit = {
-    val (filesystem, root) = fs(spark, storeDir)
-    touchOnce(filesystem, root, "_stmt_eq_run")
-  }
-
   /** Has `runId` been used — appended (data files or commit marker) or
     * folded into a compacted segment? A bare `_claim` does NOT count:
     * the claimer is still entitled to append. */

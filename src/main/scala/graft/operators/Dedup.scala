@@ -708,16 +708,6 @@ object Dedup {
   def qdotLambda(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** Dot product unrolled for a known dimension: a flat element_at
-    * expression tree instead of higher-order lambdas. NOTE: measured
-    * SLOWER than [[qdot]] on 64-dim data (ANSI bounds-checked
-    * element_at + oversized codegen); kept for small fixed dims where
-    * the tree stays compact. Summation order matches the lambda fold
-    * (left-assoc), and the math is exact integers either way. */
-  def qdotN(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i => element_at(a, i) * element_at(b, i))
-      .reduce(_ + _)
-
   /** Cosine similarity of two quantized vectors: exact integer dot and
     * norms, double only in the final division. NOTE: evaluates both
     * norms per call — when scoring many pairs, precompute the norm once

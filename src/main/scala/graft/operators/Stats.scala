@@ -442,7 +442,7 @@ object Stats {
     * distinct in ONE aggregate — plans as an Expand that replicates
     * each input row once per profiled column before the partial
     * aggregate; measured at sf0.1 on the 5-column lineitem profile
-    * that is 4× SLOWER (6.5 s vs 1.55 s warm, ProfileProbe) because
+    * that is 4× SLOWER (6.5 s vs 1.55 s warm, DESIGN.md §5) because
     * ×(cols+1) row replication through one aggregate swamps the cost
     * of re-scanning: the per-column scans are column-pruned parquet
     * reads, and each distinct shuffle carries only that column's
@@ -655,11 +655,12 @@ object Stats {
     def d4(c: Column) = c.cast(org.apache.spark.sql.types.DecimalType(38, 4))
     val complete = df.filter(cols.map(col(_).isNotNull).reduce(_ && _))
     // Each column crosses double->decimal ONCE and the k + k(k-1)/2
-    // product moments multiply IN DECIMAL (r21, CorrVariantProbe):
+    // product moments multiply IN DECIMAL (r21, DESIGN.md §5):
     // the double->decimal cast routes through Double.toString /
     // BigDecimal, so the former sum(d4(x*y)) form paid 15 such casts
     // per row where 4 suffice — measured 3.6 s -> 1.35 s on the q169
-    // moment pass at sf0.1, outputs BITWISE identical (probe-checked):
+    // moment pass at sf0.1, outputs BITWISE identical (checked on the
+    // full corr output):
     // the inputs are exact 4-decimal values, so d4(x)*d4(y) at scale 8
     // and d4(x*y) at scale 4 are the same rationals (the double
     // product is within half an ulp of the 4-decimal grid — the

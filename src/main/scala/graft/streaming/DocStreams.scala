@@ -228,8 +228,8 @@ object DocStreams {
     // Signatures unbox to Array[Long] ONCE per doc: the compare loop
     // is the gate's entire compute (compared × k element reads), and
     // indexing the encoder's boxed Seq cost ~10× per read — the
-    // HotBandProbe's 10k-resident seed batch measured 24.5 s boxed vs
-    // 3.6 s with this, same 50M comparisons (DESIGN §5).
+    // 10k-resident hot-band seed batch measured 24.5 s boxed vs
+    // 3.6 s with this, same 50M comparisons (DESIGN.md §5, hot-band cost).
     val ids = scala.collection.mutable.ArrayBuffer(
       resident.map(_.doc_id): _*)
     val sigs = scala.collection.mutable.ArrayBuffer(
@@ -443,7 +443,7 @@ object DocStreams {
     * (ObjectHashAggregate + interpreted per-row struct ordering beats
     * codegen'd sort only under real hot-band skew, where partials cap
     * at `cap` per partition instead of shipping the whole bucket —
-    * now MEASURED, r16 `BottomKSkewProbe`: at a 1M-row hot band the
+    * now MEASURED, r16, DESIGN.md §4: at a 1M-row hot band the
     * aggregate wins 37%, at 3.3M it wins 78% [10.3 s → 2.2 s warm];
     * guidance: swap the agg when buckets exceed ~100k rows).
     * BottomK is registered here so the hatch is LIVE in any session
@@ -515,7 +515,7 @@ object DocStreams {
     * ready to start. DESIGN §5's guidance made API: a backlog must
     * seed through `bucketIndex` initial state — which COMPARES NOTHING
     * (`handleInitialState` writes residents straight into state) —
-    * never through the streaming path, where the r16 HotBandProbe
+    * never through the streaming path, where r16's DESIGN.md §5 run
     * priced the default-cap hot-band seed at a quadratic ~24.5 s per
     * 10k-resident bucket batch. Admissions are IDENTICAL to the cold
     * path by construction (rank ≤ cap per band in doc_id order — the

@@ -49,7 +49,7 @@ class CorrDecimalPropertySpec extends SparkTestBase {
       r.getDouble(2), r.getDouble(3))
   }
 
-  test("2-decimal-grid inputs: scale-8 product sums equal the scale-4 " +
+  test("2-decimal-grid inputs: scale-6 product sums equal the scale-4 " +
       "form as rationals and bitwise as doubles") {
     // money-like magnitudes, exactly 2 decimals — the lineitem shape
     val cents = Gen.chooseNum(-9999999L, 9999999L)
@@ -76,7 +76,7 @@ class CorrDecimalPropertySpec extends SparkTestBase {
     val (pNew, pOld, _, _) =
       bothForms(Seq((0.001, 0.003)))
     assert(pNew != pOld,
-      "expected the scale-8 and scale-4 forms to differ off the " +
+      "expected the scale-6 and scale-4 forms to differ off the " +
         s"2-decimal grid, both were $pNew — the spec's boundary " +
         "example no longer demonstrates the precondition")
   }

@@ -485,8 +485,8 @@ class PlanSpec extends SparkTestBase {
     // one base-stats scan + one column-pruned scan per countDistinct,
     // assembled by broadcast crossJoins of 1-row results. The previous
     // single-aggregate shape planned an Expand (×cols+1 row
-    // replication) and measured 4× slower at sf0.1 (ProfileProbe,
-    // DESIGN.md) — pin its absence.
+    // replication) and measured 4× slower at sf0.1 (DESIGN.md §5) —
+    // pin its absence.
     assert(!p.contains("Expand"))
     assert("\\(\\d+\\) Scan parquet".r.findAllIn(p).length == 6)
     assert(p.contains("BroadcastNestedLoopJoin"))

@@ -463,11 +463,12 @@ class DocStreamsSpec extends SparkTestBase {
     // backlog — every 100th doc identical boilerplate, so the cap
     // genuinely truncates hot buckets — boots the gate through initial
     // state. Contract: (a) seeding compares NOTHING (the r16
-    // HotBandProbe priced streaming a hot-band seed at quadratic cost;
-    // the helper exists so that path is never taken), (b) the booted
-    // state store is IDENTICAL to what cold-streaming the backlog
-    // admits (residents and overflow counters alike), (c) the overflow
-    // report names the truncated buckets before the gate ever runs.
+    // hot-band measurement, DESIGN.md §5, priced streaming a hot-band
+    // seed at quadratic cost; the helper exists so that path is never
+    // taken), (b) the booted state store is IDENTICAL to what
+    // cold-streaming the backlog admits (residents and overflow
+    // counters alike), (c) the overflow report names the truncated
+    // buckets before the gate ever runs.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val cap = 3
