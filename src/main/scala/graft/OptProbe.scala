@@ -4,16 +4,17 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool for the optimization rounds: for each named query, write the
-  * formatted physical plan to `plans/<tag>/<name>_<suffix>.txt` and time
+  * formatted physical plan to `<outDir>/<name>_<suffix>.txt` and time
   * N noop-sink executions (the bench's own methodology — full result
   * consumed, nothing collected), bracketed by calibration probes so a
-  * retime can be salted by host condition. Usage:
-  *   runMain graft.OptProbe <sfDir> <tag> <suffix> <reps> <query names...>
+  * retime can be salted by host condition. `outDir` is created if
+  * missing and is the only place the tool writes. Usage:
+  *   runMain graft.OptProbe <sfDir> <outDir> <suffix> <reps> <query names...>
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val tag = args(1)
+    val outDir = args(1)
     val suffix = args(2)
     val reps = args(3).toInt
     val names = args.drop(4)
@@ -41,7 +42,7 @@ object OptProbe {
       w.groupBy(substring(col("h"), 1, 2)).count().count()
     }
     cal()
-    val dir = java.nio.file.Paths.get("plans", tag)
+    val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

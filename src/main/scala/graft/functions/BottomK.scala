@@ -1,15 +1,15 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.aggregate.GraftCollectTopK
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateFunction, GraftCollectTopK}
+import org.apache.spark.sql.graftshim.Bridge
 
 /** `graft_bottom_k(value, k)` — the k SMALLEST values of a group as an
   * array (unsorted; wrap in `array_sort`), exposing Spark's own
   * CollectTopK aggregate (`reverse = true` flips its top-k ordering;
-  * no SQL name exists upstream, hence this registration — composing
-  * the existing aggregate per the extension ladder, SURVEY §7).
+  * no Column or SQL builder exists upstream, hence this object —
+  * composing the existing aggregate per the extension ladder, SURVEY §7).
   * CollectTopK is a `Collect` over a `BoundedPriorityQueue`, so every
   * PARTIAL buffer caps at k and map-side combine ships at most k rows
   * per partition per group — the property a bounded group fold needs
@@ -29,48 +29,14 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.GraftCollectTopK
 object BottomK {
   val name = "graft_bottom_k"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(GraftCollectTopK.getClass.getName, name),
-        (exprs: Seq[Expression]) => {
-          // named errors at ANALYSIS time: a wrong arity must not
-          // surface as IndexOutOfBounds, and k ≤ 0 must not reach the
-          // executors (PriorityQueue(0) throws mid-job there)
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"$name expects exactly (value, k); got ${exprs.length} arguments")
-          // any FOLDABLE integral expression works (lit(3L), 1 + 2, a
-          // byte/short literal) — CollectTopK only needs the evaluated
-          // Int, and "integer literal" was stricter than the contract
-          // (ADVICE r15)
-          exprs(1) match {
-            case e if e.foldable && (e.dataType match {
-                case org.apache.spark.sql.types.ByteType |
-                     org.apache.spark.sql.types.ShortType |
-                     org.apache.spark.sql.types.IntegerType |
-                     org.apache.spark.sql.types.LongType => true
-                case _ => false
-              }) =>
-              val k = e.eval() match {
-                case null => throw new IllegalArgumentException(
-                  s"$name: k must not be NULL")
-                case b: Byte => b.toLong
-                case s: Short => s.toLong
-                case i: Int => i.toLong
-                case l: Long => l
-              }
-              if (k < 1L) throw new IllegalArgumentException(
-                s"$name: k must be >= 1, got $k")
-              if (k > Int.MaxValue) throw new IllegalArgumentException(
-                s"$name: k must fit in an Int, got $k")
-              GraftCollectTopK.bottomK(exprs.head, k.toInt)
-            case other => throw new IllegalArgumentException(
-              s"$name: k must be a foldable integral expression, got ${other.sql}")
-          }
-        })
-    }
+  /** The k smallest values of `value` per group, as an array column. */
+  def column(value: Column, k: Int): Column =
+    Bridge.column(aggregate(Bridge.expression(value), k).toAggregateExpression())
+
+  /** The aggregate function itself; `k` must be at least 1 (a
+    * `PriorityQueue(0)` would throw mid-job on the executors). */
+  def aggregate(value: Expression, k: Int): AggregateFunction = {
+    require(k >= 1, s"$name: k must be >= 1, got $k")
+    GraftCollectTopK.bottomK(value, k)
   }
 }

@@ -1,26 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native DISTINCT character n-grams — bit-identical to
-  * `array_distinct(charShingleMultiset(text, n))`
-  * ([[graft.operators.Dedup.charShingles]], the living definition the
-  * DuckDB oracles mirror) including array_distinct's first-occurrence
-  * order, without materializing the L-element multiset array and
+/** Native DISTINCT character n-grams ([[graft.operators.Dedup.charShingles]])
+  * — bit-identical to the built-in chain the DuckDB oracles mirror,
+  * `array_distinct(transform(sequence(1, greatest(length(text) - n + 1,
+  * 1)), i -> substr(text, i, n)))`, including array_distinct's
+  * first-occurrence order, without materializing the L-element multiset array and
   * running the generic array_distinct pass per document. On all-ASCII
   * text (byte count == char count) each gram is a zero-copy byte
   * slice and, for n <= 8, dedupes through a packed-long hash set with
   * no per-gram allocation at all; the general path mirrors the
   * declarative per-position `substr` exactly.
   *
-  * Gram semantics (exactly charShingleMultiset): character positions
+  * Gram semantics (exactly that chain's): character positions
   * 1..max(L-n+1, 1), each `substr(i, n)` (a text shorter than n
   * yields itself as its single gram; the empty text yields one empty
   * gram).
@@ -53,6 +53,13 @@ case class CharNgrams(child: Expression, n: Int) extends UnaryExpression {
 
 object CharNgrams {
   val name = "graft_char_ngrams"
+
+  /** The distinct character `n`-grams of `text` (a string column),
+    * in first-seen order. */
+  def column(text: Column, n: Int): Column = {
+    require(n >= 1, s"$name: n must be >= 1, got $n")
+    Bridge.column(CharNgrams(Bridge.expression(text), n))
+  }
 
   /** Distinct char n-grams in first-seen order. */
   def of(text: UTF8String, n: Int): ArrayData = {
@@ -95,25 +102,5 @@ object CharNgrams {
     }
     new GenericArrayData(seen.toArray.asInstanceOf[Array[AnyRef]]
       .asInstanceOf[Array[Any]])
-  }
-
-  /** Idempotent registration; gram size must be an integer literal. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[CharNgrams].getName, name),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"$name expects (text, gram size), got ${exprs.length} args")
-          exprs(1) match {
-            case Literal(v: Int, IntegerType) => CharNgrams(exprs.head, v)
-            case other => throw new IllegalArgumentException(
-              s"$name requires a literal int gram size, got $other")
-          }
-        })
-    }
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, Decimal}
 
 /** Native `cast(double AS decimal(18,3))` for the exact-decimal money
@@ -27,10 +27,11 @@ import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, Decimal}
   * (Dec3PropertySpec pins it on random doubles, exact ties, and
   * magnitude extremes).
   *
-  * Domain contract: finite inputs (money/quantity columns). NaN and
-  * infinities throw — the money columns this serves never carry
-  * them, and silently mapping them to NULL could mask a broken
-  * upstream under a non-ANSI session. */
+  * Failure contract: exactly the cast's under the default
+  * `spark.sql.ansi.enabled=true`. NULL, NaN and ±Infinity yield NULL;
+  * a finite value whose rounded form overflows decimal(18,3) throws
+  * (`ArithmeticException`, where the cast throws
+  * `SparkArithmeticException`). */
 case class Dec3(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -42,6 +43,8 @@ case class Dec3(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = DecimalType(18, 3)
 
+  override def nullable: Boolean = true
+
   override def prettyName: String = "graft_dec3"
 
   override protected def nullSafeEval(input: Any): Any =
@@ -49,7 +52,8 @@ case class Dec3(child: Expression) extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x =>
-      s"${ev.value} = graft.functions.Dec3.of($x);")
+      s"""${ev.value} = graft.functions.Dec3.of($x);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
 
   override protected def withNewChildInternal(newChild: Expression): Dec3 =
     copy(child = newChild)
@@ -58,19 +62,22 @@ case class Dec3(child: Expression) extends UnaryExpression {
 object Dec3 {
   val name = "graft_dec3"
 
+  /** `x` (a double column) as decimal(18,3); see the class doc. */
+  def column(x: Column): Column = Bridge.column(Dec3(Bridge.expression(x)))
+
   /** Largest |x·1000| the fast path accepts: below 10^12 the combined
     * multiply + shortest-repr error stays ≤ ~3.3e-4, an order under
     * the 1e-3 tie guard band. */
   private val FastMagnitude = 1.0e12
 
   /** `cast(d AS decimal(18,3))` (shortest-repr HALF_UP), precision 18
-    * scale 3. Throws on NaN/infinite input (domain contract) and on
-    * decimal(18,3) overflow. */
+    * scale 3. NULL for NaN/infinite input; throws on decimal(18,3)
+    * overflow. */
   def of(d: Double): Decimal = {
     val v = d * 1000.0
     val av = math.abs(v)
     // NaN fails both comparisons below, so it falls to the slow path
-    // and throws there.
+    // and yields NULL there.
     if (av < FastMagnitude) {
       val fl = math.floor(av)
       val frac = av - fl
@@ -81,30 +88,12 @@ object Dec3 {
       }
     }
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d))
-      throw new ArithmeticException(
-        s"graft_dec3: non-finite input $d outside the money-column domain")
+      return null
     val bd = new java.math.BigDecimal(java.lang.Double.toString(d))
       .setScale(3, java.math.RoundingMode.HALF_UP)
     if (bd.precision > 18)
       throw new ArithmeticException(
         s"graft_dec3: $d overflows decimal(18,3)")
     Decimal(bd)
-  }
-
-  /** Idempotent registration into a live session (same mechanism as
-    * [[SimHash32.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[Dec3].getName, name),
-        (exprs: Seq[Expression]) => {
-          require(exprs.length == 1,
-            s"$name expects exactly one argument, got ${exprs.length}")
-          Dec3(exprs.head)
-        })
-    }
   }
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -50,6 +50,9 @@ case class Md5Prefix64(child: Expression) extends UnaryExpression {
 object Md5Prefix64 {
   val name = "graft_md5_prefix64"
 
+  /** The 60-bit md5 prefix of `s` (a string column). */
+  def column(s: Column): Column = Bridge.column(Md5Prefix64(Bridge.expression(s)))
+
   /** First 60 bits of md5(bytes), as the hex-prefix integer. */
   def ofBytes(bytes: Array[Byte]): Long = {
     val d = org.apache.commons.codec.digest.DigestUtils.md5(bytes)
@@ -57,18 +60,5 @@ object Md5Prefix64 {
     var i = 0
     while (i < 7) { acc = (acc << 8) | (d(i) & 0xffL); i += 1 }
     (acc << 4) | ((d(7) & 0xffL) >>> 4)
-  }
-
-  /** Idempotent registration into a live session (same mechanism as
-    * [[QDot.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[Md5Prefix64].getName, name),
-        (exprs: Seq[Expression]) => Md5Prefix64(exprs.head))
-    }
   }
 }

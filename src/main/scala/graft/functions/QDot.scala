@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Native integer dot product over two `array<bigint>` columns, with
@@ -14,12 +14,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * drop to a native `Expression` only when measurement says so).
   *
   * Measurement (1M dot products of dim 64 at sf0.1, DESIGN.md §5):
-  * this expression and the built-in `aggregate(zip_with(a, b, *), ...)`
-  * lambda are at parity (~0.12s) — Spark 4's lambda evaluator is not a
-  * bottleneck at these shapes, so the operators keep the declarative
-  * built-in form and this class stays as the vetted escape hatch for
-  * higher dimensions / row counts where the per-element overhead would
-  * surface.
+  * inside whole-stage codegen this expression and the built-in
+  * `aggregate(zip_with(a, b, *), ...)` lambda are at parity (~0.12s);
+  * on plan shapes that fall out of codegen the lambda runs interpreted
+  * at ~9× the cost ([[graft.operators.Dedup.qdot]]), which is why the
+  * operators use this expression.
   *
   * Semantics: sum over i of a(i)*b(i), left-to-right — identical to the
   * lambda fold (exact integer math, order-independent anyway). Inputs
@@ -76,21 +75,10 @@ case class QDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Registration into a live session's FunctionRegistry (the driver
-  * hands us an existing SparkSession, so `SparkSessionExtensions`
-  * injection at build time is not available; the registry API is the
-  * same mechanism `injectFunction` uses underneath). Idempotent. */
 object QDot {
   val name = "graft_qdot"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[QDot].getName, name),
-        (exprs: Seq[Expression]) => QDot(exprs.head, exprs(1)))
-    }
-  }
+  /** The dot product of two `array<bigint>` columns. */
+  def column(a: Column, b: Column): Column =
+    Bridge.column(QDot(Bridge.expression(a), Bridge.expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** Consistent-hash ring successor lookup: the shard of the first vnode
@@ -62,6 +62,14 @@ case class RingLookup(first: Expression, second: Expression,
 object RingLookup {
   val name = "graft_ring_lookup"
 
+  /** The shard of `keyHash` on the ring given as parallel arrays
+    * (`positions` ascending, `shards(i)` owning `positions(i)`); both
+    * enter the plan as array literals. */
+  def column(keyHash: Column, positions: Array[Long],
+             shards: Array[Long]): Column =
+    Bridge.column(RingLookup(Bridge.expression(keyHash),
+      Literal(positions), Literal(shards)))
+
   /** Binary search for the first position ≥ kh; wraps to index 0. */
   def lookup(kh: Long, pos: ArrayData, sh: ArrayData): Long = {
     val n = pos.numElements()
@@ -81,23 +89,5 @@ object RingLookup {
       if (pos.getLong(m) >= kh) hi = m else lo = m + 1
     }
     sh.getLong(if (lo == n) 0 else lo)
-  }
-
-  /** Idempotent registration (the [[QDot.register]] mechanism). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[RingLookup].getName, name),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 3)
-            throw new IllegalArgumentException(
-              s"$name expects exactly 3 arguments " +
-                s"(key, positions, shards), got ${exprs.length}")
-          RingLookup(exprs.head, exprs(1), exprs(2))
-        })
-    }
   }
 }

@@ -2,19 +2,20 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native 32-bit SimHash fingerprint ('0'/'1' string) of a
-  * space-tokenized text — bit-identical to the declarative chain in
-  * [[graft.operators.Dedup.simHash32]] (the living definition the
-  * DuckDB oracle mirrors), without its per-token intermediates: the
-  * built-in form materializes, per token, a 32-char md5 hex string,
+  * space-tokenized text ([[graft.operators.Dedup.simHash32]]) —
+  * bit-identical to the built-in chain the DuckDB oracle mirrors (an
+  * `aggregate` over the tokens that votes the 32 hex digits of each
+  * token's md5 through `zip_with`), without its per-token
+  * intermediates: the built-in form materializes, per token, a 32-char md5 hex string,
   * splits it into 32 single-char strings, and folds a fresh 32-int
   * array through `zip_with` — allocation per token per bit. Here the
   * votes accumulate in one int[32] straight from the raw digest
@@ -45,10 +46,9 @@ case class SimHash32(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "graft_simhash32"
 
-  // NULL text yields "" — the declarative chain's value (concat_ws
-  // skips the null vote array), so a nullable text column can never
-  // fork the native form from the oracle's living definition
-  // (ADVICE r21).
+  // NULL text yields "" — the built-in chain's value (concat_ws skips
+  // the null vote array), so a nullable text column can never fork
+  // the native form from the oracle (ADVICE r21).
   override def nullable: Boolean = false
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
@@ -77,6 +77,9 @@ case class SimHash32(child: Expression) extends UnaryExpression {
 
 object SimHash32 {
   val name = "graft_simhash32"
+
+  /** The SimHash32 fingerprint of `text` (a string column). */
+  def column(text: Column): Column = Bridge.column(SimHash32(Bridge.expression(text)))
 
   private val md5Local = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest =
@@ -116,18 +119,5 @@ object SimHash32 {
       k += 1
     }
     UTF8String.fromBytes(out)
-  }
-
-  /** Idempotent registration into a live session (same mechanism as
-    * [[QDot.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[SimHash32].getName, name),
-        (exprs: Seq[Expression]) => SimHash32(exprs.head))
-    }
   }
 }

@@ -2,20 +2,20 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native robust-fingerprint selector: the 4 smallest md5 hex digests
   * of a text's DISTINCT character 8-grams, ascending, joined with '|'
-  * — bit-identical to the declarative chain in
-  * [[graft.operators.TextAnalysis.fingerprint]]'s md5 tier
-  * (`concat_ws("|", slice(array_sort(transform(charShingles(text, 8),
-  * md5)), 1, 4))`, the living definition the DuckDB oracle mirrors).
+  * — the selector of [[graft.operators.TextAnalysis.fingerprint]]'s md5
+  * tier, bit-identical to the built-in chain the DuckDB oracle mirrors,
+  * `concat_ws("|", slice(array_sort(transform(charShingles(text, 8),
+  * md5)), 1, 4))`.
   *
   * What the built-in chain pays that this removes: a 32-char hex
   * string MATERIALIZED per gram (L of them per document), two L-sized
@@ -49,10 +49,10 @@ case class Winnow4Md5(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "graft_winnow4_md5"
 
-  // NULL text yields "" — the declarative chain's value (concat_ws
-  // skips the null gram array), so robust_digest stays md5("") on a
+  // NULL text yields "" — the built-in chain's value (concat_ws skips
+  // the null gram array), so robust_digest stays md5("") on a
   // nullable text column instead of silently forking from the
-  // oracle's living definition (ADVICE r21).
+  // oracle (ADVICE r21).
   override def nullable: Boolean = false
 
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
@@ -81,6 +81,9 @@ case class Winnow4Md5(child: Expression) extends UnaryExpression {
 
 object Winnow4Md5 {
   val name = "graft_winnow4_md5"
+
+  /** The "h1|h2|h3|h4" selector of `text` (a string column). */
+  def column(text: Column): Column = Bridge.column(Winnow4Md5(Bridge.expression(text)))
 
   private val md5Local = new ThreadLocal[MessageDigest] {
     override def initialValue(): MessageDigest =
@@ -195,19 +198,6 @@ object Winnow4Md5 {
         acc.offer(md.digest())
       }
       i += 1
-    }
-  }
-
-  /** Idempotent registration into a live session (same mechanism as
-    * [[QDot.register]]). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[Winnow4Md5].getName, name),
-        (exprs: Seq[Expression]) => Winnow4Md5(exprs.head))
     }
   }
 }

@@ -1,20 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native word n-gram MULTISET of a space-tokenized text — the grams
-  * of [[graft.operators.Dedup.wordShingleMultiset]] (the living
-  * definition the DuckDB oracles mirror) without its per-row zip-fold:
-  * the declarative builder runs n−1 interpreted `zip_with` passes
-  * (HOFs are CodegenFallback), allocating an intermediate gram array
-  * per step per document.
+  * of [[graft.operators.Dedup.wordShingleMultiset]], equal to the
+  * zip-fold [[graft.operators.Dedup.wordShingleMultisetFromTokens]]
+  * over `split(text, " ")` (the form the DuckDB oracles mirror)
+  * without its per-row work: the zip-fold runs n−1 interpreted
+  * `zip_with` passes (HOFs are CodegenFallback), allocating an
+  * intermediate gram array per step per document.
   *
   * The key identity this exploits: `split(text, " ")` splits at EVERY
   * single space (empty tokens kept, Java limit -1 semantics), so the
@@ -59,6 +60,12 @@ case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
 object WordNgrams {
   val name = "graft_word_ngrams"
 
+  /** The word `n`-gram multiset of `text` (a string column). */
+  def column(text: Column, n: Int): Column = {
+    require(n >= 1, s"$name: n must be >= 1, got $n")
+    Bridge.column(WordNgrams(Bridge.expression(text), n))
+  }
+
   /** Word n-gram multiset as byte-range slices of the text (see the
     * class doc for why slicing is exact). Fewer than n tokens → one
     * gram, the text itself. */
@@ -95,26 +102,5 @@ object WordNgrams {
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  /** Idempotent registration; the second argument must be an integer
-    * literal (the gram size is a plan-time constant). */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    val ident = FunctionIdentifier(name)
-    if (!registry.functionExists(ident)) {
-      registry.registerFunction(
-        ident,
-        new ExpressionInfo(classOf[WordNgrams].getName, name),
-        (exprs: Seq[Expression]) => {
-          if (exprs.length != 2) throw new IllegalArgumentException(
-            s"$name expects (text, gram size), got ${exprs.length} args")
-          exprs(1) match {
-            case Literal(v: Int, IntegerType) => WordNgrams(exprs.head, v)
-            case other => throw new IllegalArgumentException(
-              s"$name requires a literal int gram size, got $other")
-          }
-        })
-    }
   }
 }

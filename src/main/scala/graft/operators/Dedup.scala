@@ -34,25 +34,17 @@ object Dedup {
 
   /** Word n-grams WITH duplicates — the cheap construction for any
     * consumer that is multiset-invariant (MinHash signatures: the min
-    * over a multiset equals the min over its distinct set). For n=2 a
-    * single `zip_with` pass replaces the sequence/slice/concat_ws
-    * builder — measured 3.1 s → 0.6 s for the whole
-    * shingle+explode+md5 signature path at sf0.1 (DESIGN.md §5).
+    * over a multiset equals the min over its distinct set). Evaluates
+    * through the native [[graft.functions.WordNgrams]] expression:
+    * each gram is a zero-copy byte-range slice of the text
+    * (consecutive tokens re-joined with single spaces ARE a substring
+    * of the original) — no interpreted zip-fold, no intermediate gram
+    * arrays. Same grams as [[wordShingleMultisetFromTokens]] over
+    * `split(text, " ")` (NativeTextHashSpec).
     * A text with fewer than n words yields its single joined token
     * (never an empty multiset, so Jaccard stays defined). */
   def wordShingleMultiset(text: Column, n: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) =>
-        // Native expression (r21): each gram is a zero-copy byte-range
-        // slice of the text (consecutive tokens re-joined with single
-        // spaces ARE a substring of the original) — no interpreted
-        // zip-fold, no intermediate gram arrays. Bit-identical to the
-        // fold below (NativeTextHashSpec); the fold stays as the
-        // session-free fallback and the oracle's living definition.
-        graft.functions.WordNgrams.register(sp)
-        call_function(graft.functions.WordNgrams.name, text, lit(n))
-      case None => wordShingleMultisetFromTokens(split(text, " "), n)
-    }
+    graft.functions.WordNgrams.column(text, n)
 
   /** [[wordShingleMultiset]] over an ALREADY-TOKENIZED word array —
     * for callers that materialize the split behind an explode-barrier
@@ -91,40 +83,19 @@ object Dedup {
   def wordShinglesFromTokens(words: Column, n: Int): Column =
     array_distinct(wordShingleMultisetFromTokens(words, n))
 
-  /** Character n-grams with duplicates (cheap multiset form for the
-    * signature path — see [[wordShingleMultiset]]).
-    *
-    * Deliberately NOT the word-builder's zip-fold: chars differ from
-    * words. Here each gram is ONE `substr` call (no per-position array
-    * slice), so there is no O(L²) re-evaluation to fix — and a
-    * zip-fold over `split(text, "")` was measured SLOWER (q39 5.8 s →
-    * 11.2 s, q33 5.5 s → 6.9 s at sf0.1): it allocates n−1
-    * intermediate gram arrays per document where substr allocates
-    * once per gram. Keep the per-position form. */
-  def charShingleMultiset(text: Column, n: Int): Column =
-    transform(
-      sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
-      i => text.substr(i, lit(n)))
-
-  /** Distinct character n-grams (for near-dup on raw strings).
-    * With a live session: the native [[graft.functions.CharNgrams]]
+  /** Distinct character n-grams (for near-dup on raw strings), in
+    * first-seen order: the native [[graft.functions.CharNgrams]]
     * expression (zero-copy byte-slice grams, packed-long dedupe on
-    * ASCII — bit-identical including array_distinct's first-seen
-    * order, NativeTextHashSpec); the declarative chain stays as the
-    * session-free fallback and the oracle's living definition. */
+    * ASCII). Gram semantics: character positions 1..max(L-n+1, 1),
+    * each `substr(i, n)`. */
   def charShingles(text: Column, n: Int): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) =>
-        graft.functions.CharNgrams.register(sp)
-        call_function(graft.functions.CharNgrams.name, text, lit(n))
-      case None => array_distinct(charShingleMultiset(text, n))
-    }
+    graft.functions.CharNgrams.column(text, n)
 
   /** Character n-grams as pre-exploded (id, s) ROWS: positions explode
     * first and each gram is a single substr — no per-document string
     * array ever materializes (measured 4.7 s → 2.8 s for the
-    * explode+md5 stage at sf0.1). Same multiset as
-    * [[charShingleMultiset]]; feed to [[minHashLshWith]]'s `sigRows`. */
+    * explode+md5 stage at sf0.1). Same grams as [[charShingles]]
+    * before its dedupe; feed to [[minHashLshWith]]'s `sigRows`. */
   def charShingleRows(df: DataFrame, idCol: String, textCol: String,
                       n: Int): DataFrame =
     // parallelized BEFORE the explode: the repartition then moves (and
@@ -173,21 +144,13 @@ object Dedup {
     * occur both engines compute the identical digest, so cross-engine
     * parity is unaffected).
     *
-    * With a live session the hash evaluates through the native
-    * [[graft.functions.Md5Prefix64]] expression — bit-identical to the
-    * built-in chain but without materializing and re-parsing the hex
-    * string (measured 2.5 s → 1.75 s over 2.9M grams at sf0.1); the
-    * declarative chain remains as the session-free fallback and as the
-    * living definition the oracle mirrors
-    * (DuckDB: ('0x' || substr(md5(s), 1, 15))::BIGINT). */
-  def digest64(s: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) =>
-        graft.functions.Md5Prefix64.register(sp)
-        call_function(graft.functions.Md5Prefix64.name, s)
-      case None =>
-        conv(substring(md5(s), 1, 15), 16, 10).cast("long")
-    }
+    * Evaluates through the native [[graft.functions.Md5Prefix64]]
+    * expression — bit-identical to `conv(substring(md5(s), 1, 15), 16,
+    * 10)` cast to bigint, but without materializing and re-parsing the
+    * hex string (measured 2.5 s → 1.75 s over 2.9M grams at sf0.1).
+    * The DuckDB oracles mirror it as
+    * ('0x' || substr(md5(s), 1, 15))::BIGINT. */
+  def digest64(s: Column): Column = graft.functions.Md5Prefix64.column(s)
 
   /** All `k` Bloom bit positions of a 60-bit [[digest64]] value by
     * Kirsch–Mitzenmacher double hashing ("Less Hashing, Same
@@ -625,46 +588,13 @@ object Dedup {
     * top bit set (digit ≥ '8') — 32 independent fair bits from one md5.
     * Fingerprint bit j is the sign of the ±1 vote sum over all tokens
     * (with multiplicity). Near-dup banding uses [[simHashBandKeys]].
+    *
+    * Evaluates through the native [[graft.functions.SimHash32]]
+    * expression: the votes accumulate in one int[32] straight from the
+    * digest nibbles, with no per-token hex split, 32-int array or
+    * zip_with fold (measured 3.0 s -> 0.8 s on q32 at sf0.1).
     */
-  def simHash32(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) =>
-        // Native expression — bit-identical to the declarative chain
-        // below (SimHash32Spec pins it on the edge fixtures), without
-        // the per-token hex split / 32-int array / zip_with fold
-        // allocations (measured 3.0 s -> 0.8 s on q32 at sf0.1). The
-        // chain stays as the session-free fallback and the living
-        // definition the DuckDB oracle mirrors.
-        graft.functions.SimHash32.register(sp)
-        call_function(graft.functions.SimHash32.name, text)
-      case None => simHash32Lambda(text)
-    }
-
-  /** The declarative fold [[simHash32]] compiles natively — kept as
-    * the session-free fallback and the oracle's living definition. */
-  def simHash32Lambda(text: Column): Column = {
-    val toks = split(text, " ")
-    // ONE md5 per token: split the hex digest into its 32 chars and
-    // vote all bits in a single fold. The per-bit formulation
-    // (32 aggregates, each re-hashing every token) cost 32 md5 per
-    // token — invisible while the bench's count() sink pruned the
-    // unreferenced fingerprint column, charged honestly (9.8 s at
-    // sf0.1) by the r13 noop sink. Identical bits: hex digit j ≥ '8'
-    // is the same test either way.
-    // slice(…, 1, 32): on pinned Spark 4.1.2 the empty-regex split
-    // already yields exactly 32 hex chars (SPARK-40194 drops the
-    // trailing empty element), but on any engine that keeps it,
-    // zip_with would pad the 32-long accumulator to 33 and silently
-    // grow the fingerprint — the slice makes the 32-bit contract
-    // explicit rather than version-dependent (ADVICE r13).
-    val votes = aggregate(toks, array_repeat(lit(0), 32),
-      (acc, w) => zip_with(acc,
-        transform(slice(split(md5(w), ""), 1, 32), c =>
-          when(c >= "8", lit(1)).otherwise(lit(-1))),
-        _ + _))
-    concat_ws("", transform(votes, v =>
-      when(v > 0, "1").otherwise("0")))
-  }
+  def simHash32(text: Column): Column = graft.functions.SimHash32.column(text)
 
   /** Band keys over a bit-string fingerprint: `bands` equal slices, each
     * prefixed with its index. Two docs within hamming distance d collide
@@ -686,27 +616,15 @@ object Dedup {
 
   /** Integer dot product of two quantized vectors (exact in long).
     *
-    * With a live session this evaluates through the native codegen'd
-    * [[graft.functions.QDot]] expression — bit-identical to the lambda
-    * chain (QDotSpec pins it), but immune to the interpreted-lambda
-    * cliff: inside whole-stage codegen the two are equal (0.11 vs
-    * 0.13 s per 1M×64 dots, DESIGN.md §2), but on plan shapes that fall
-    * OUT of codegen (e.g. scoring pairs joined from a checkpointed
-    * frame) the lambda runs interpreted at ~9× the cost — measured
-    * 3.05 s → 0.32 s on semanticDedup's 250k-pair verify at sf0.1. The
-    * lambda chain stays as the session-free fallback and the living
-    * definition the oracles mirror. */
-  def qdot(a: Column, b: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) =>
-        graft.functions.QDot.register(sp)
-        call_function(graft.functions.QDot.name, a, b)
-      case None => qdotLambda(a, b)
-    }
-
-  /** The declarative fold [[qdot]] falls back to without a session. */
-  def qdotLambda(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+    * Evaluates through the native codegen'd [[graft.functions.QDot]]
+    * expression, which is immune to the interpreted-lambda cliff of
+    * the `aggregate(zip_with(a, b, *))` fold: inside whole-stage
+    * codegen the two are equal (0.11 vs 0.13 s per 1M×64 dots,
+    * DESIGN.md §2), but on plan shapes that fall OUT of codegen (e.g.
+    * scoring pairs joined from a checkpointed frame) the lambda runs
+    * interpreted at ~9× the cost — measured 3.05 s → 0.32 s on
+    * semanticDedup's 250k-pair verify at sf0.1. */
+  def qdot(a: Column, b: Column): Column = graft.functions.QDot.column(a, b)
 
   /** Cosine similarity of two quantized vectors: exact integer dot and
     * norms, double only in the final division. NOTE: evaluates both

@@ -255,11 +255,9 @@ object Layout {
     * q177; DESIGN.md §5). Zero joins either way. */
   def ringAssign(spark: org.apache.spark.sql.SparkSession,
                  keyHash: Column, ring: Seq[(Long, Int)]): Column = {
-    graft.functions.RingLookup.register(spark)
     // hashRing sorts by position — RingLookup's binary-search contract.
-    call_function(graft.functions.RingLookup.name, keyHash,
-      lit(ring.map(_._1).toArray),
-      lit(ring.map(_._2.toLong).toArray))
+    graft.functions.RingLookup.column(keyHash, ring.map(_._1).toArray,
+      ring.map(_._2.toLong).toArray)
   }
 
   /** SHARD-SCALING AUDIT — consistent hashing vs modulo, per row.

@@ -24,9 +24,7 @@ object Reconcile {
 
   /** Per-`bucket` digest of `rowStr`: (bucket, n_rows, digest). */
   def digest(df: DataFrame, bucket: Column, rowStr: Column): DataFrame = {
-    graft.functions.Md5Prefix64.register(df.sparkSession)
-    df.select(bucket.as("bucket"),
-      call_function(graft.functions.Md5Prefix64.name, rowStr).as("_h"))
+    df.select(bucket.as("bucket"), Dedup.digest64(rowStr).as("_h"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_rows"), expr("bit_xor(_h)").as("digest"))
   }

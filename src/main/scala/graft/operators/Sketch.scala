@@ -41,12 +41,9 @@ object Sketch {
   def kmvSketch(df: DataFrame, groupCols: Seq[String], valueStr: Column,
                 k: Int): DataFrame = {
     require(k >= 2, "KMV needs k >= 2")
-    val sp = df.sparkSession
-    graft.functions.Md5Prefix64.register(sp)
     val g = groupCols.map(col)
     val hashed = df
-      .select(g :+ call_function(graft.functions.Md5Prefix64.name,
-        valueStr).as("h"): _*)
+      .select(g :+ Dedup.digest64(valueStr).as("h"): _*)
       .distinct()
     val w = Window.partitionBy(g: _*).orderBy(col("h"))
     hashed
@@ -215,12 +212,10 @@ object Sketch {
     require(k >= 2, "need k >= 2 sample slots")
     require(qs.nonEmpty && qs.forall(q => q >= 0.0 && q <= 1.0),
       s"quantile fractions must be in [0,1], got $qs")
-    val sp = df.sparkSession
-    graft.functions.Md5Prefix64.register(sp)
     val g = groupCols.map(col)
     val base = df
-      .select(g :+ call_function(graft.functions.Md5Prefix64.name, idStr)
-        .as("h") :+ col(valueCol).cast("double").as("x"): _*)
+      .select(g :+ Dedup.digest64(idStr).as("h") :+
+        col(valueCol).cast("double").as("x"): _*)
       .where(col("x").isNotNull && !isnan(col("x")) &&
         abs(col("x")) < lit(Double.PositiveInfinity))
     val wH = Window.partitionBy(g: _*).orderBy(col("h"))
@@ -276,13 +271,12 @@ object Sketch {
     require(depth >= 1 && depth <= 16, s"depth must be in [1,16], got $depth")
     require(width >= 2 && depth.toLong * width <= (1 << 24),
       s"depth*width must stay broadcastable (<= 2^24), got $depth*$width")
-    graft.functions.Md5Prefix64.register(items.sparkSession)
     items
       .filter(col(itemCol).isNotNull)
       .select(col(itemCol).as("_i"),
         explode(array((0 until depth).map(lit): _*)).as("j"))
       .select(col("j"),
-        (call_function(graft.functions.Md5Prefix64.name,
+        (Dedup.digest64(
           concat(col("j").cast("string"), lit(":"), col("_i"))) % width)
           .as("bucket"))
       .groupBy("j", "bucket")
@@ -300,13 +294,12 @@ object Sketch {
     * `n_est`. */
   def countMinLookup(sketch: DataFrame, probes: DataFrame, itemCol: String,
                      depth: Int, width: Int): DataFrame = {
-    graft.functions.Md5Prefix64.register(probes.sparkSession)
     val out = probes.columns
     probes
       .filter(col(itemCol).isNotNull)
       .withColumn("j", explode(array((0 until depth).map(lit): _*)))
       .withColumn("bucket",
-        call_function(graft.functions.Md5Prefix64.name,
+        Dedup.digest64(
           concat(col("j").cast("string"), lit(":"), col(itemCol))) % width)
       .join(broadcast(sketch), Seq("j", "bucket"), "left")
       .groupBy(out.map(col).toIndexedSeq: _*)

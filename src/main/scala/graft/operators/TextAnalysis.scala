@@ -439,7 +439,6 @@ object TextAnalysis {
 
   def fingerprint(df: DataFrame, idCol: String, textCol: String,
                   tier: Dedup.DigestTier = Dedup.Md5Tier): DataFrame = {
-    val grams = Dedup.charShingles(col(textCol), 8)
     // Measured dead end (r13): winnowing on digest64 integers (native
     // expression, long sort) instead of md5 hex strings moved q39 by
     // <2% at sf0.1 — hashing ~L grams per document IS the cost, the
@@ -452,24 +451,17 @@ object TextAnalysis {
     // hashes); the preserved contract is decision-level — equal texts
     // collide, distinct texts don't — spec'd in DedupTierSpec.
     // The 4-smallest-hash selection ("h1|h2|h3|h4") feeding the robust
-    // digest. Md5 tier with a live session: the native Winnow4Md5
-    // expression — bit-identical to the declarative chain (the oracle's
-    // living definition, Winnow4Md5Spec pins it) but it hex-encodes 4
-    // digests instead of L and keeps a running top-4 instead of
-    // materializing, deduping and sorting an L-element hex array
-    // (measured 7.5 s -> see the r21 optimization log on q39 at
-    // sf0.1; the md5-per-gram oracle-parity cost is unchanged).
+    // digest. Md5 tier: the native Winnow4Md5 expression — bit-identical
+    // to `concat_ws("|", slice(array_sort(transform(grams, md5)), 1, 4))`
+    // (the chain the DuckDB oracle mirrors; NativeTextHashSpec pins it)
+    // but it hex-encodes 4 digests instead of L and keeps a running
+    // top-4 instead of materializing, deduping and sorting an L-element
+    // hex array (measured 7.5 s -> see the r21 optimization log on q39
+    // at sf0.1; the md5-per-gram oracle-parity cost is unchanged).
     val winnow = tier match {
-      case Dedup.Md5Tier =>
-        org.apache.spark.sql.SparkSession.getActiveSession match {
-          case Some(sp) =>
-            graft.functions.Winnow4Md5.register(sp)
-            call_function(graft.functions.Winnow4Md5.name, col(textCol))
-          case None =>
-            concat_ws("|",
-              slice(array_sort(transform(grams, g => md5(g))), 1, 4))
-        }
+      case Dedup.Md5Tier => graft.functions.Winnow4Md5.column(col(textCol))
       case Dedup.XxTier =>
+        val grams = Dedup.charShingles(col(textCol), 8)
         concat_ws("|",
           slice(transform(array_sort(transform(grams, g => xxhash64(g))),
             h => h.cast("string")), 1, 4))

@@ -13,10 +13,10 @@ import graft.functions.Md5Prefix64
   * `cast(conv(substring(md5(s), 1, 15), 16, 10) as bigint)` into the
   * native [[graft.functions.Md5Prefix64]] expression.
   *
-  * Why a rule and not just the function: the declarative chain is the
-  * LIVING DEFINITION — it appears in session-free fallbacks
-  * ([[graft.operators.Dedup.digest64]]), in user-authored SQL, and in
-  * every DuckDB oracle mirror. The rewrite makes the optimization a
+  * Why a rule and not just the function: library code builds the
+  * native expression directly ([[graft.operators.Dedup.digest64]]),
+  * but the chain is how user-authored SQL and the DuckDB oracle
+  * mirrors spell the digest. The rewrite makes the optimization a
   * PROPERTY OF THE SESSION rather than of call sites: any plan that
   * spells out the chain gets the measured 30% digest speedup
   * (DESIGN.md §5, 2.5 s → 1.75 s over 2.9M grams) without knowing the

@@ -17,21 +17,15 @@ object QueryUtil {
   /** Exact-decimal view of a double column. Scale 3 so 2-decimal money
     * values never land on a rounding halfway point (SURVEY.md §7.4 #5).
     *
-    * With a live session this evaluates through the native codegen'd
-    * [[graft.functions.Dec3]] expression — bit-identical to the cast
-    * by construction (fast integer path outside a guard band around
-    * rounding ties, the cast's own BigDecimal semantics inside it;
-    * Dec3PropertySpec pins equality) without the per-row
-    * Double.toString/BigDecimal allocation chain. The plain cast
-    * stays as the session-free fallback and the oracle's living
-    * definition. */
-  def dec(c: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(sp) =>
-        graft.functions.Dec3.register(sp)
-        call_function(graft.functions.Dec3.name, c)
-      case None => c.cast(DecimalType(18, 3))
-    }
+    * Evaluates through the native codegen'd [[graft.functions.Dec3]]
+    * expression: the value of `cast(c AS decimal(18,3))` by
+    * construction (fast integer path outside a guard band around
+    * rounding ties, the cast's own BigDecimal semantics inside it)
+    * without the per-row Double.toString/BigDecimal allocation chain.
+    * It fails exactly where the cast fails under the default ANSI
+    * mode: NULL, NaN and ±Infinity give NULL, and a value that
+    * overflows decimal(18,3) throws. Dec3PropertySpec pins both. */
+  def dec(c: Column): Column = graft.functions.Dec3.column(c)
 
   /** Decimal literal 1 for `1 - discount` style arithmetic. */
   val decOne: Column = lit(1).cast(DecimalType(18, 3))

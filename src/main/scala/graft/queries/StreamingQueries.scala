@@ -459,14 +459,13 @@ object StreamingQueries {
     // lookup runs batch-side over the bounded sink with the same
     // broadcast join as the batch operator; est >= exact always.
     "q195_stream_count_min" -> ((s, dir) => {
-      graft.functions.Md5Prefix64.register(s)
       val depth = 4; val width = 256
       val ev = eventsStream(s, dir).select(col("event_type").as("_i"))
       val sk = ev
         .select(col("_i"),
           explode(array((0 until depth).map(lit): _*)).as("j"))
         .select(col("j"),
-          (call_function(graft.functions.Md5Prefix64.name,
+          (graft.operators.Dedup.digest64(
             concat(col("j").cast("string"), lit(":"), col("_i"))) % width)
             .as("bucket"))
         .groupBy("j", "bucket").agg(count(lit(1)).as("c"))
@@ -520,11 +519,9 @@ object StreamingQueries {
     // loosest state contract of the twins, no ordering needed).
     "q212_stream_kmv" -> ((s, dir) => {
       import s.implicits._
-      graft.functions.Md5Prefix64.register(s)
       val ev = eventsStream(s, dir)
         .select(col("event_type").as("k"),
-          call_function(graft.functions.Md5Prefix64.name,
-            col("user_id").cast("string")).as("h"))
+          graft.operators.Dedup.digest64(col("user_id").cast("string")).as("h"))
         .as[EventStreams.KeyedHash]
       val sk = EventStreams.kmvSketchStream(s, ev, k = 64)
       val sunk = withRocksDbState(s) {

@@ -445,12 +445,10 @@ object DocStreams {
     * at `cap` per partition instead of shipping the whole bucket —
     * now MEASURED, r16, DESIGN.md §4: at a 1M-row hot band the
     * aggregate wins 37%, at 3.3M it wins 78% [10.3 s → 2.2 s warm];
-    * guidance: swap the agg when buckets exceed ~100k rows).
-    * BottomK is registered here so the hatch is LIVE in any session
-    * that builds an index; semantics spec-pinned (BottomKSpec). */
+    * guidance: swap the agg when buckets exceed ~100k rows; the hatch
+    * is `BottomK.column`, semantics spec-pinned in BottomKSpec). */
   private[streaming] def bucketIndexFrame(banded: DataFrame,
                                           cap: Int): DataFrame = {
-    graft.functions.BottomK.register(banded.sparkSession)
     val byBand = org.apache.spark.sql.expressions.Window
       .partitionBy("band").orderBy("doc_id")
     banded

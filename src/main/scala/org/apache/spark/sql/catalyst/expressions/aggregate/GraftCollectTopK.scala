@@ -8,6 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * own bounded top-k aggregate (`BoundedPriorityQueue` partials)
   * instead of re-implementing one; only the constructor is exposed. */
 object GraftCollectTopK {
-  def bottomK(child: Expression, k: Int): Expression =
+  def bottomK(child: Expression, k: Int): AggregateFunction =
     CollectTopK(child, k, reverse = true)
 }

@@ -1,17 +1,24 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 
-/** Single-purpose accessor for the `private[sql]` `Dataset.ofRows` —
-  * the standard pattern for a library that constructs a DataFrame from
-  * a hand-built logical plan (custom operators in `graft.plans`).
-  * Nothing else from the private surface is touched.
+/** Accessors for the `private[sql]` members a library needs to build
+  * plans and columns from Catalyst nodes: `Dataset.ofRows` (custom
+  * operators in `graft.plans`) and `ExpressionUtils` (graft's native
+  * expressions in `graft.functions`, which become Columns directly —
+  * no function registry, so any session analyzes them). Nothing else
+  * from the private surface is touched.
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Test-only view of what a `SparkSessionExtensions` instance would
     * register (`buildPlannerStrategies` is `private[sql]`). */

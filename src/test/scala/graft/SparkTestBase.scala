@@ -13,6 +13,11 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkTestBase.session
 
+  /** A session built with [[graft.plans.GraftExtensions]] on the shared
+    * context: the deployment route that gives graft's functions their
+    * SQL names. */
+  lazy val extSession: SparkSession = SparkTestBase.extSession
+
   // Per-suite hygiene: drop leftover persisted state and let the
   // weak-ref cleaner drain (the GC inside sweep) so later suites run
   // against a clean scheduler, not 20 suites of dead shuffles.
@@ -68,6 +73,17 @@ object SparkTestBase {
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    s
+  }
+
+  lazy val extSession: SparkSession = {
+    val shared = session
+    val s = SparkSession.builder()
+      .withExtensions(new graft.plans.GraftExtensions).create()
+    // create() makes the new session the active and default one; every
+    // other spec keeps running on the shared session
+    SparkSession.setActiveSession(shared)
+    SparkSession.setDefaultSession(shared)
     s
   }
 }

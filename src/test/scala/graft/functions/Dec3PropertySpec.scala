@@ -1,8 +1,8 @@
 package graft.functions
 
 import graft.SparkTestBase
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
@@ -17,7 +17,13 @@ import org.scalacheck.rng.Seed
   *  - values adjacent to ties (k/2000 ± ulp),
   *  - random finite doubles across magnitudes up to the decimal(18,3)
   *    range, where the fast/slow magnitude split sits,
-  *  - zero, negative zero, and sign symmetry.
+  *  - zero, negative zero, and sign symmetry,
+  *  - the failure contract under the default ANSI mode: NULL for NaN
+  *    and ±Infinity, an error on overflow — exactly the cast's.
+  *
+  * Every comparison runs twice: over a local relation (the optimizer
+  * folds the projection, so Dec3 evaluates interpreted) and behind a
+  * repartition (whole-stage codegen).
   */
 class Dec3PropertySpec extends SparkTestBase {
 
@@ -26,19 +32,23 @@ class Dec3PropertySpec extends SparkTestBase {
   private def samples[A](g: Gen[A], n: Int): Seq[A] =
     (0 until n).flatMap(i => g.apply(Gen.Parameters.default, Seed(97L + i)))
 
-  private def assertMatchesCast(xs: Seq[Double], tag: String): Unit = {
-    Dec3.register(spark)
+  private def bothPaths(xs: Seq[java.lang.Double]): Seq[DataFrame] = {
     val df = xs.toDF("x")
-    val bad = df.select(col("x"),
-        call_function(Dec3.name, col("x")).as("fast"),
-        col("x").cast(DecimalType(18, 3)).as("ref"))
-      .filter(not(col("fast") <=> col("ref")))
-      .collect()
-    assert(bad.isEmpty,
-      s"$tag: native dec3 diverged from cast on " +
-        bad.take(5).map(r => s"${r.getDouble(0)} -> ${r.get(1)} vs " +
-          s"${r.get(2)}").mkString("; "))
+    Seq(df, df.repartition(2))
   }
+
+  private def assertMatchesCast(xs: Seq[Double], tag: String): Unit =
+    bothPaths(xs.map(Double.box)).foreach { df =>
+      val bad = df.select(col("x"),
+          Dec3.column(col("x")).as("fast"),
+          ReferenceChains.dec3(col("x")).as("ref"))
+        .filter(not(col("fast") <=> col("ref")))
+        .collect()
+      assert(bad.isEmpty,
+        s"$tag: native dec3 diverged from cast on " +
+          bad.take(5).map(r => s"${r.getDouble(0)} -> ${r.get(1)} vs " +
+            s"${r.get(2)}").mkString("; "))
+    }
 
   test("money domain: 2-decimal values match the cast bitwise") {
     val cents = Gen.chooseNum(-999999999L, 999999999L)
@@ -64,10 +74,28 @@ class Dec3PropertySpec extends SparkTestBase {
   }
 
   test("ANSI-independent null passthrough") {
-    Dec3.register(spark)
-    val df = Seq[java.lang.Double](null, 1.5).toDF("x")
-    val out = df.select(call_function(Dec3.name, col("x"))).collect()
-    assert(out(0).isNullAt(0) && out(1).getDecimal(0).toPlainString ==
-      "1.500")
+    bothPaths(Seq[java.lang.Double](null, 1.5)).foreach { df =>
+      val out = df.select(Dec3.column(col("x"))).collect()
+      val vals = out.map(r => Option(r.getDecimal(0)).map(_.toPlainString))
+      assert(vals.sorted.toSeq == Seq(None, Some("1.500")))
+    }
+  }
+
+  test("NaN and infinities yield NULL, exactly as the cast does") {
+    assertMatchesCast(Seq(Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1.25), "non-finite")
+    bothPaths(Seq(Double.NaN, Double.PositiveInfinity,
+        Double.NegativeInfinity).map(Double.box)).foreach { df =>
+      assert(df.select(Dec3.column(col("x")).as("d"))
+        .filter(col("d").isNull).count() == 3)
+    }
+  }
+
+  test("overflow of decimal(18,3) fails, as the cast does") {
+    for (x <- Seq(1e20, -1e20, 1e15); df <- bothPaths(Seq(Double.box(x)))) {
+      intercept[Exception](df.select(ReferenceChains.dec3(col("x"))).collect())
+      val e = intercept[Exception](df.select(Dec3.column(col("x"))).collect())
+      assert(e.getMessage.contains("overflows decimal(18,3)"), e.getMessage)
+    }
   }
 }

@@ -10,27 +10,24 @@ class Md5Prefix64Spec extends SparkTestBase {
 
   import spark.implicits._
 
-  private def chain = (s: org.apache.spark.sql.Column) =>
-    conv(substring(md5(s), 1, 15), 16, 10).cast("long")
+  private def chain = ReferenceChains.md5Prefix64 _
 
   test("matches conv(substring(md5)) on ascii, unicode, empty, long strings") {
-    Md5Prefix64.register(spark)
     val inputs = Seq("", "a", "hello world", "naïve — ünïcodé ✓",
       "x" * 10000, "tab\tnewline\nquote'", "0123456789abcdef")
     val df = inputs.toDF("s")
       .select(chain(col("s")).as("want"),
-        call_function(Md5Prefix64.name, col("s")).as("got"))
+        Md5Prefix64.column(col("s")).as("got"))
     df.collect().foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
   test("matches on a corpus sample through both eval paths") {
-    Md5Prefix64.register(spark)
     val docs = graft.Tables.load(spark, sfDir, "documents")
       .select(explode(split(col("text"), " ")).as("s")).limit(5000)
     // codegen path (projection)
     val diff = docs
       .select(chain(col("s")).as("want"),
-        call_function(Md5Prefix64.name, col("s")).as("got"))
+        Md5Prefix64.column(col("s")).as("got"))
       .filter(col("want") =!= col("got")).count()
     assert(diff == 0)
     // interpreted path (expression.eval)
@@ -40,10 +37,8 @@ class Md5Prefix64Spec extends SparkTestBase {
   }
 
   test("null input yields null") {
-    Md5Prefix64.register(spark)
     val r = spark.range(1)
-      .select(call_function(Md5Prefix64.name,
-        lit(null).cast("string")).as("h"))
+      .select(Md5Prefix64.column(lit(null).cast("string")).as("h"))
       .head()
     assert(r.isNullAt(0))
   }

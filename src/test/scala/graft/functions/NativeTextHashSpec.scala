@@ -1,14 +1,12 @@
 package graft.functions
 
 import graft.SparkTestBase
-import graft.operators.Dedup
 import org.apache.spark.sql.functions._
 
 /** Bit-identity pins for the r21 native text-hash expressions against
-  * their declarative living definitions (the forms the DuckDB oracles
-  * mirror): [[SimHash32]] vs [[Dedup.simHash32Lambda]] and
-  * [[Winnow4Md5]] vs the `concat_ws("|", slice(array_sort(
-  * transform(charShingles(text, 8), md5)), 1, 4))` chain — over the
+  * the built-in chains they replace (the forms the DuckDB oracles
+  * mirror, kept in [[ReferenceChains]]): [[SimHash32]], [[Winnow4Md5]],
+  * [[WordNgrams]] and [[CharNgrams]] — over the
   * edge fixtures that exercise every branch (empty text, single char,
   * consecutive/leading/trailing spaces, short-of-one-gram texts,
   * duplicate grams, and multi-byte chars for the generic path). */
@@ -33,63 +31,57 @@ class NativeTextHashSpec extends SparkTestBase {
 
   test("native simhash32 is bit-identical to the declarative chain") {
     import spark.implicits._
-    SimHash32.register(spark)
     val df = fixtures.toDF("text")
     val diff = df.select(
-        call_function(SimHash32.name, col("text")).as("native"),
-        Dedup.simHash32Lambda(col("text")).as("decl"))
+        SimHash32.column(col("text")).as("native"),
+        ReferenceChains.simHash32(col("text")).as("decl"))
       .filter(col("native") =!= col("decl"))
     assert(diff.isEmpty, diff.collect().mkString("; "))
     // and a null text yields "" — the declarative chain's value
     // (concat_ws skips the null vote array; ADVICE r21)
     val n = Seq[Option[String]](None).toDF("text")
-      .select(call_function(SimHash32.name, col("text"))).collect()
+      .select(SimHash32.column(col("text"))).collect()
     assert(n.head.getString(0) == "")
   }
 
   test("native winnow4 is bit-identical to the declarative chain") {
     import spark.implicits._
-    Winnow4Md5.register(spark)
-    val decl = concat_ws("|",
-      slice(array_sort(transform(Dedup.charShingles(col("text"), 8),
-        g => md5(g))), 1, 4))
+    val decl = ReferenceChains.winnow4Md5(col("text"))
     val df = fixtures.toDF("text")
     val diff = df.select(
-        call_function(Winnow4Md5.name, col("text")).as("native"),
+        Winnow4Md5.column(col("text")).as("native"),
         decl.as("decl"))
       .filter(col("native") =!= col("decl"))
     assert(diff.isEmpty, diff.collect().mkString("; "))
     // null text yields "" — the declarative chain's value (ADVICE r21)
     val n = Seq[Option[String]](None).toDF("text")
-      .select(call_function(Winnow4Md5.name, col("text"))).collect()
+      .select(Winnow4Md5.column(col("text"))).collect()
     assert(n.head.getString(0) == "")
   }
 
   test("native word ngrams are bit-identical to the zip-fold chain") {
     import spark.implicits._
-    WordNgrams.register(spark)
     val df = fixtures.toDF("text")
     for (n <- Seq(2, 3, 8)) {
       val diff = df.select(
-          call_function(WordNgrams.name, col("text"), lit(n)).as("native"),
-          Dedup.wordShingleMultisetFromTokens(split(col("text"), " "), n)
+          WordNgrams.column(col("text"), n).as("native"),
+          ReferenceChains.wordNgrams(col("text"), n)
             .as("decl"))
         .filter(not(col("native") <=> col("decl")))
       assert(diff.isEmpty, s"n=$n: " + diff.collect().mkString("; "))
     }
     val nu = Seq[Option[String]](None).toDF("text")
-      .select(call_function(WordNgrams.name, col("text"), lit(2))).collect()
+      .select(WordNgrams.column(col("text"), 2)).collect()
     assert(nu.head.isNullAt(0))
   }
 
   test("native word ngrams agree on the documents corpus") {
-    WordNgrams.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     for (n <- Seq(2, 8)) {
       val diff = docs.select(
-          call_function(WordNgrams.name, col("text"), lit(n)).as("native"),
-          Dedup.wordShingleMultisetFromTokens(split(col("text"), " "), n)
+          WordNgrams.column(col("text"), n).as("native"),
+          ReferenceChains.wordNgrams(col("text"), n)
             .as("decl"))
         .filter(not(col("native") <=> col("decl")))
       assert(diff.isEmpty, s"n=$n")
@@ -98,28 +90,26 @@ class NativeTextHashSpec extends SparkTestBase {
 
   test("native char ngrams are bit-identical to the distinct chain") {
     import spark.implicits._
-    CharNgrams.register(spark)
     val df = fixtures.toDF("text")
     for (n <- Seq(3, 5, 8)) {
       val diff = df.select(
-          call_function(CharNgrams.name, col("text"), lit(n)).as("native"),
-          array_distinct(Dedup.charShingleMultiset(col("text"), n))
+          CharNgrams.column(col("text"), n).as("native"),
+          ReferenceChains.charNgrams(col("text"), n)
             .as("decl"))
         .filter(not(col("native") <=> col("decl")))
       assert(diff.isEmpty, s"n=$n: " + diff.collect().mkString("; "))
     }
     val nu = Seq[Option[String]](None).toDF("text")
-      .select(call_function(CharNgrams.name, col("text"), lit(5))).collect()
+      .select(CharNgrams.column(col("text"), 5)).collect()
     assert(nu.head.isNullAt(0))
   }
 
   test("native char ngrams agree on the documents corpus") {
-    CharNgrams.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val diff = docs.select(
-        call_function(CharNgrams.name, col("text"), lit(5)).as("native"),
-        array_distinct(Dedup.charShingleMultiset(col("text"), 5))
+        CharNgrams.column(col("text"), 5).as("native"),
+        ReferenceChains.charNgrams(col("text"), 5)
           .as("decl"))
       .filter(not(col("native") <=> col("decl")))
     assert(diff.isEmpty)
@@ -129,18 +119,14 @@ class NativeTextHashSpec extends SparkTestBase {
     // the real corpus shape (sf0.001): long texts, repeated shingles
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    SimHash32.register(spark)
-    Winnow4Md5.register(spark)
-    val decl = concat_ws("|",
-      slice(array_sort(transform(Dedup.charShingles(col("text"), 8),
-        g => md5(g))), 1, 4))
+    val decl = ReferenceChains.winnow4Md5(col("text"))
     // null-SAFE compare (ADVICE r21): =!= would silently DROP any row
     // where one side is NULL — exactly the known native-vs-declarative
     // divergence mode this pin exists to catch.
     val diff = docs.select(
-        call_function(SimHash32.name, col("text")).as("sn"),
-        Dedup.simHash32Lambda(col("text")).as("sd"),
-        call_function(Winnow4Md5.name, col("text")).as("wn"),
+        SimHash32.column(col("text")).as("sn"),
+        ReferenceChains.simHash32(col("text")).as("sd"),
+        Winnow4Md5.column(col("text")).as("wn"),
         decl.as("wd"))
       .filter(not(col("sn") <=> col("sd")) || not(col("wn") <=> col("wd")))
     assert(diff.isEmpty)
@@ -148,17 +134,13 @@ class NativeTextHashSpec extends SparkTestBase {
 
   test("null text: native simhash/winnow match the declarative chains") {
     import spark.implicits._
-    SimHash32.register(spark)
-    Winnow4Md5.register(spark)
-    val decl = concat_ws("|",
-      slice(array_sort(transform(Dedup.charShingles(col("text"), 8),
-        g => md5(g))), 1, 4))
+    val decl = ReferenceChains.winnow4Md5(col("text"))
     val rows = Seq[Option[String]](None, Some(""), Some("a b"))
       .toDF("text")
       .select(
-        call_function(SimHash32.name, col("text")).as("sn"),
-        Dedup.simHash32Lambda(col("text")).as("sd"),
-        call_function(Winnow4Md5.name, col("text")).as("wn"),
+        SimHash32.column(col("text")).as("sn"),
+        ReferenceChains.simHash32(col("text")).as("sd"),
+        Winnow4Md5.column(col("text")).as("wn"),
         decl.as("wd"))
     val diff = rows
       .filter(not(col("sn") <=> col("sd")) || not(col("wn") <=> col("wd")))
@@ -167,8 +149,8 @@ class NativeTextHashSpec extends SparkTestBase {
     // and the shared value for a NULL text is the chain's "" (so
     // robust_digest = md5('') on a nullable column, not NULL)
     val nu = Seq[Option[String]](None).toDF("text")
-      .select(call_function(SimHash32.name, col("text")),
-        call_function(Winnow4Md5.name, col("text"))).collect().head
+      .select(SimHash32.column(col("text")),
+        Winnow4Md5.column(col("text"))).collect().head
     assert(nu.getString(0) == "" && nu.getString(1) == "")
   }
 }

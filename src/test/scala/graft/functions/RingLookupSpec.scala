@@ -12,22 +12,10 @@ class RingLookupSpec extends SparkTestBase {
 
   import spark.implicits._
 
-  /** The retired literal-struct-array argmin — kept here as the
-    * definitional reference the native expression must match. */
-  private def argminAssign(keyHash: org.apache.spark.sql.Column,
-                           ring: Seq[(Long, Int)]) = {
-    val arr = array(ring.map { case (h, s) =>
-      struct(pmod(lit(h) - keyHash, lit(Layout.RingModulus)).as("d"),
-        lit(s.toLong).as("s"))
-    }: _*)
-    array_min(arr).getField("s")
-  }
-
   test("successor semantics: exact hit, between, and wrap-around") {
-    RingLookup.register(spark)
     val ring = Seq((10L, 2), (20L, 0), (300L, 1))  // sorted by position
-    val pos = lit(ring.map(_._1).toArray)
-    val sh = lit(ring.map(_._2.toLong).toArray)
+    val pos = ring.map(_._1).toArray
+    val sh = ring.map(_._2.toLong).toArray
     val cases = Seq(
       0L -> 2L,     // below all → first vnode
       10L -> 2L,    // exact hit counts (distance 0)
@@ -37,14 +25,13 @@ class RingLookupSpec extends SparkTestBase {
       300L -> 1L,
       301L -> 2L)   // above all → wraps to index 0
     val got = cases.map(_._1).toDF("kh")
-      .select(col("kh"), call_function(RingLookup.name, col("kh"), pos, sh)
+      .select(col("kh"), RingLookup.column(col("kh"), pos, sh)
         .as("shard"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     cases.foreach { case (k, want) => assert(got(k) == want, s"kh=$k") }
   }
 
   test("matches the argmin definition on real md5 hashes, both rings") {
-    RingLookup.register(spark)
     val keys = spark.range(2000).select(
       expr("cast(conv(substring(md5(cast(id as string)), 1, 15), 16, 10) as bigint)")
         .as("kh"))
@@ -52,14 +39,13 @@ class RingLookupSpec extends SparkTestBase {
       val ring = Layout.hashRing(shards, vnodes)
       val diff = keys.select(
         Layout.ringAssign(spark, col("kh"), ring).as("fast"),
-        argminAssign(col("kh"), ring).as("want"))
+        ReferenceChains.ringLookup(col("kh"), ring).as("want"))
         .filter(col("fast") =!= col("want"))
       assert(diff.count() == 0, s"shards=$shards")
     }
   }
 
   test("interpreted path agrees with codegen") {
-    RingLookup.register(spark)
     val ring = Layout.hashRing(5, 8)
     val pos = ring.map(_._1).toArray
     val sh = ring.map(_._2.toLong).toArray

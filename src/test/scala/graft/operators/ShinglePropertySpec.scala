@@ -16,9 +16,10 @@ import org.scalacheck.rng.Seed
   *  - wordShingleMultisetFromTokens (the zip-fold) == naive sliding
   *    window, any token list (incl. empty tokens from repeated
   *    delimiters) and any n in 2..8.
-  *  - charShingleMultiset == code-point sliding window, incl.
-  *    surrogate pairs (the per-position substr counts code points,
-  *    not UTF-16 units or bytes).
+  *  - the reference char-gram chain == code-point sliding window,
+  *    incl. surrogate pairs (the per-position substr counts code
+  *    points, not UTF-16 units or bytes), and the native charShingles
+  *    == its distinct grams in first-seen order.
   *  - simHash32 (single md5 per token, one vote fold) == the per-bit
   *    definition computed in plain Scala.
   */
@@ -63,10 +64,12 @@ class ShinglePropertySpec extends SparkTestBase {
       val expect =
         if (cps.size < n) Seq(text)
         else cps.sliding(n).map(_.mkString).toSeq
-      val got = Seq(Tuple1(text)).toDF("t")
-        .select(Dedup.charShingleMultiset(col("t"), n).as("g"))
-        .collect().head.getSeq[String](0)
-      assert(got == expect, s"n=$n text=$text")
+      val row = Seq(Tuple1(text)).toDF("t")
+        .select(graft.functions.ReferenceChains.charShingleMultiset(col("t"), n),
+          Dedup.charShingles(col("t"), n))
+        .collect().head
+      assert(row.getSeq[String](0) == expect, s"n=$n text=$text")
+      assert(row.getSeq[String](1) == expect.distinct, s"n=$n text=$text")
     }
   }
 

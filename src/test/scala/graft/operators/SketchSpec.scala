@@ -82,12 +82,10 @@ class SketchSpec extends SparkTestBase {
     assert(math.abs(median - 2499.5) < 500, s"sample median $median")
     // MERGEABILITY: bottom-k of the union == re-bottom-k of the two
     // halves' bottom-k's — per-slice sketches combine losslessly.
-    graft.functions.Md5Prefix64.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("g").orderBy("h")
     def bottomK(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("g"),
-        call_function(graft.functions.Md5Prefix64.name, idStr).as("h"))
+      d.select(col("g"), Dedup.digest64(idStr).as("h"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 512).drop("rn")
     val merged = bottomK(df.filter(col("id") % 2 === 0))
