@@ -69,21 +69,21 @@ def main(sf_dir, out_dir, strict=False):
         res_dir = os.path.join(out_dir, name)
         files = glob.glob(os.path.join(res_dir, "*.parquet"))
         if not files:
-            print(f"FAIL {name}: no spark output"); n_fail += 1; continue
+            print(f"FAIL {name}: no spark output", flush=True); n_fail += 1; continue
         try:
             got = con.execute(f"SELECT * FROM '{res_dir}/*.parquet'")
             got_rows, got_cols = got.fetchall(), [d[0] for d in got.description]
             exp = con.execute(oracle[name])
             exp_rows, exp_cols = exp.fetchall(), [d[0] for d in exp.description]
         except Exception as e:
-            print(f"FAIL {name}: {e}"); n_fail += 1; continue
+            print(f"FAIL {name}: {e}", flush=True); n_fail += 1; continue
         g, gc = canon(got_rows, got_cols)
         e, ec = canon(exp_rows, exp_cols)
         if gc != ec:
-            print(f"FAIL {name}: columns {gc} vs {ec}"); n_fail += 1; continue
+            print(f"FAIL {name}: columns {gc} vs {ec}", flush=True); n_fail += 1; continue
         if g != e and name in PROBES:
             print(f"PROBE {name}: spark {g[:1]} vs local-duckdb {e[:1]} "
-                  "(expected divergence on a ns-truncating engine)")
+                  "(expected divergence on a ns-truncating engine)", flush=True)
             n_pass += 1
             continue
         if g != e:
@@ -92,25 +92,25 @@ def main(sf_dir, out_dir, strict=False):
             if diffs:
                 i, a, b = diffs[0]
                 print(f"; first diff row {i}:\n  got {a}\n  exp {b}", end="")
-            print()
+            print(flush=True)
             n_fail += 1
             continue
         if strict:
             try:
                 mism = type_diff(con, res_dir, oracle[name])
             except Exception as ex:
-                print(f"FAIL {name}: strict schema fetch: {ex}")
+                print(f"FAIL {name}: strict schema fetch: {ex}", flush=True)
                 n_fail += 1
                 continue
             if mism:
                 det = "; ".join(f"{c}: spark={g} oracle={e}"
                                 for c, g, e in mism)
-                print(f"TYPEFAIL {name}: {det}")
+                print(f"TYPEFAIL {name}: {det}", flush=True)
                 n_fail += 1
                 continue
-        print(f"PASS {name} ({len(g)} rows)")
+        print(f"PASS {name} ({len(g)} rows)", flush=True)
         n_pass += 1
-    print(f"== {n_pass} pass, {n_fail} fail ==")
+    print(f"== {n_pass} pass, {n_fail} fail ==", flush=True)
     return 1 if n_fail else 0
 
 if __name__ == "__main__":

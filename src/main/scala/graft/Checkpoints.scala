@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftshim.Bridge
 
 /** Block-manager hygiene for iterative operators and long-running
   * sessions.
@@ -26,26 +27,27 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Checkpoints {
 
-  /** localCheckpoint with AQE scoped OFF for the materialization, so
-    * the resulting LogicalRDD keeps the plan's hashpartitioning
-    * instead of UnknownPartitioning (AQE wraps the plan in
-    * AdaptiveSparkPlanExec, from which Dataset.checkpoint extracts no
-    * partitioning — measured, DESIGN.md §5). Use on checkpoints whose
-    * consumers aggregate/join on the partitioning key, so they reuse
-    * the one exchange paid before the checkpoint instead of each
-    * re-shuffling the materialized rows. Consumers still execute
-    * under the session's AQE setting — the partitioning is leaf
-    * metadata. */
+  /** localCheckpoint that keeps the plan's hashpartitioning, for
+    * checkpoints whose consumers aggregate/join on the partitioning
+    * key: they reuse the one exchange paid before the checkpoint
+    * instead of each re-shuffling the materialized rows.
+    *
+    * Under AQE the executed plan is an AdaptiveSparkPlanExec, from
+    * which Dataset.checkpoint extracts no partitioning (the scan reads
+    * as UnknownPartitioning — measured, DESIGN.md §5). So the plan is
+    * materialized on a clone of the frame's session with AQE off, and
+    * the resulting LogicalRDD, which carries the partitioning as leaf
+    * metadata, is rebound to the frame's own session. The caller's
+    * conf is never written: queries other threads plan meanwhile, and
+    * this frame's consumers, run under the session's own AQE setting.
+    * (Scoping the conf to the thread with `SQLConf.withExistingConf`
+    * does not work: the checkpoint came out UnknownPartitioning.) A
+    * clone costs about 1 ms once warm. */
   def localCheckpointKeepingPartitioning(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    val key = "spark.sql.adaptive.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try df.localCheckpoint()
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    val clone = Bridge.cloneSession(df.sparkSession)
+    clone.conf.set("spark.sql.adaptive.enabled", "false")
+    val ckpt = Bridge.ofRows(clone, df.queryExecution.logical).localCheckpoint()
+    Bridge.ofRows(df.sparkSession, ckpt.queryExecution.logical)
   }
 
   /** Free the block-manager storage behind `localCheckpoint()`ed

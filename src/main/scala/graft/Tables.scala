@@ -29,7 +29,7 @@ object Tables {
       //  - MICROS not-adjusted-to-UTC: Spark infers TIMESTAMP_NTZ;
       //    cast to TIMESTAMP — the session runs UTC, so the wall-clock
       //    reinterpretation is value-preserving (same unix_micros).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      sessionDefaults(spark)
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case LongType =>
@@ -39,6 +39,16 @@ object Tables {
         case _ => raw
       }
     } else spark.read.parquet(s"$dir/$name.parquet")
+  }
+
+  /** The one place graft sets a session conf the fixture readers need:
+    * parquet TIMESTAMP(NANOS) reads as a long, which [[load]], the
+    * events stream and the q60/q82 encoding probes convert themselves
+    * (the vectorized reader rejects NANOS otherwise). Idempotent, and
+    * a session that already has the setting is not written again. */
+  def sessionDefaults(spark: SparkSession): Unit = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    if (!spark.conf.getOption(key).contains("true")) spark.conf.set(key, "true")
   }
 
   private val lastRegistered =

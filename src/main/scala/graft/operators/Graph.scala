@@ -358,9 +358,9 @@ object Graph {
     // post-partial-agg exchanges — a clear win at low iteration
     // counts and at worst a wash when partial aggregation compresses
     // heavily.
-    val withDeg = checkpointKeepingPartitioning(e.join(
-      endpoints.select(col("node").as("src"), col("outdeg")), "src")
-      .repartition(col("dst")))
+    val withDeg = graft.Checkpoints.localCheckpointKeepingPartitioning(
+      e.join(endpoints.select(col("node").as("src"), col("outdeg")), "src")
+        .repartition(col("dst")))
     var ranks = endpoints.select(col("node"), lit(base).as("rank"))
     var prevCkpt: DataFrame = null
     for (i <- 1 to iters) {
@@ -422,12 +422,16 @@ object Graph {
     * re-shuffling the edge list each round. The dedupe itself rides
     * the same exchange: hashpartitioning(u) satisfies
     * ClusteredDistribution(u, v), so dropDuplicates after the
-    * repartition is partition-local. The checkpoints materialize with
-    * AQE scoped OFF: LogicalRDD.fromDataset cannot extract the output
-    * partitioning from an AdaptiveSparkPlanExec (measured: the
-    * checkpoint scan degrades to UnknownPartitioning and every round
-    * re-exchanges), while the join strategy is unaffected (the keep
-    * side is statically broadcast from carried stats) and the only
+    * repartition is partition-local. The checkpoints materialize on
+    * a session clone with AQE off
+    * ([[graft.Checkpoints.localCheckpointKeepingPartitioning]]):
+    * LogicalRDD.fromDataset cannot extract the output partitioning
+    * from an AdaptiveSparkPlanExec (measured: the checkpoint scan
+    * degrades to UnknownPartitioning and every round re-exchanges).
+    * The caller's session keeps AQE on throughout, so later queries
+    * and the final aggregate still plan adaptively. In the
+    * materialized rounds the join strategy is unaffected (the keep
+    * side is statically broadcast from carried stats), and the only
     * AQE feature given up is small-partition coalescing on shuffles
     * this layout removes outright.
     *
@@ -436,7 +440,7 @@ object Graph {
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     val fwd = edges.select(col(aCol).as("u"), col(bCol).as("v"))
-    var e = checkpointKeepingPartitioning(
+    var e = graft.Checkpoints.localCheckpointKeepingPartitioning(
       fwd.union(fwd.select(col("v").as("u"), col("u").as("v")))
         .repartition(col("u"))
         .dropDuplicates("u", "v"))
@@ -449,7 +453,7 @@ object Graph {
         .join(keep, col("u") === col("_keep"), "left_semi")
         .join(keep, col("v") === col("_keep"), "left_semi")
       if (r < rounds) {
-        e = checkpointKeepingPartitioning(next)
+        e = graft.Checkpoints.localCheckpointKeepingPartitioning(next)
         graft.Checkpoints.free(prev)
         prev = e
       } else {
@@ -458,9 +462,6 @@ object Graph {
     }
     e.groupBy(col("u").as("node")).agg(count(lit(1)).as("degree"))
   }
-
-  private def checkpointKeepingPartitioning(df: DataFrame): DataFrame =
-    graft.Checkpoints.localCheckpointKeepingPartitioning(df)
 
   /** NEWMAN MODULARITY of a node partition — the standard "is this
     * clustering better than chance" score for a community assignment

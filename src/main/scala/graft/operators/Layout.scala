@@ -253,8 +253,7 @@ object Layout {
     * generated megabyte-scale codegen that cost seconds of Janino
     * compile per plan and S·V struct allocations per row (measured on
     * q177; DESIGN.md §5). Zero joins either way. */
-  def ringAssign(spark: org.apache.spark.sql.SparkSession,
-                 keyHash: Column, ring: Seq[(Long, Int)]): Column = {
+  def ringAssign(keyHash: Column, ring: Seq[(Long, Int)]): Column = {
     // hashRing sorts by position — RingLookup's binary-search contract.
     graft.functions.RingLookup.column(keyHash, ring.map(_._1).toArray,
       ring.map(_._2.toLong).toArray)
@@ -291,8 +290,8 @@ object Layout {
         pmod(col(idCol), lit(shards.toLong)).as("shard_mod"),
         pmod(col(idCol), lit(shards.toLong + 1)).as("shard_mod_new"),
         kh.as("_kh"))
-      .withColumn("shard_ring", ringAssign(df.sparkSession, col("_kh"), oldRing))
-      .withColumn("shard_ring_new", ringAssign(df.sparkSession, col("_kh"), newRing))
+      .withColumn("shard_ring", ringAssign(col("_kh"), oldRing))
+      .withColumn("shard_ring_new", ringAssign(col("_kh"), newRing))
       .drop("_kh")
   }
 }

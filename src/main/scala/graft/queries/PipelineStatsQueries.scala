@@ -134,7 +134,7 @@ private[queries] object PipelineStatsQueries {
     //   green ⇔ floor/truncation end-to-end; red ⇔ it rounds half up
     //   (~50% of µs values shift by +1, flipping parity).
     "q60_probe_us_parity" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      Tables.sessionDefaults(s)
       val raw = s.read.parquet(s"$dir/events.parquet")
       // µs from the RAW encoding: nanos-as-long (rounds 1-6 fixture) or
       // µs TIMESTAMP_NTZ (r7 fixture) — the probe pins the same floor

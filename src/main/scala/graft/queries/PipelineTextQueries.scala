@@ -91,7 +91,7 @@ private[queries] object PipelineTextQueries {
     // Spark's `ts div 1000`, and µs-derived output columns (the shape
     // that was red in r2 via DuckDB's epoch_us()) are safe to restore.
     "q82_probe_us_fingerprint" -> ((s, dir) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      Tables.sessionDefaults(s)
       val raw = s.read.parquet(s"$dir/events.parquet")
       val us = raw.select(rawUs(raw).as("us"))
       us.agg(min(col("us")).as("min_us"), max(col("us")).as("max_us"),

@@ -32,7 +32,7 @@ object StreamingQueries {
   /** Load the events fixture as a STREAM, with the same TIMESTAMP(NANOS)
     * → µs conversion as the batch `Tables.load`. */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.Tables.sessionDefaults(s)
     val path = s"$dir/events.parquet"
     val schema = s.read.parquet(path).schema
     // The file stream source wants a DIRECTORY; scope it to the events
@@ -65,24 +65,14 @@ object StreamingQueries {
     *    sink view is dropped — otherwise every `graft_qXX_sink` table
     *    (and the terminated query holding it) stays referenced for the
     *    whole session's lifetime.
-    */
+    *
+    * `rocksDb` runs the query on the RocksDB state-store provider,
+    * transformWithState's requirement (see [[withStreamConf]]). */
   private val streamShufflePartitions = "1"
 
   private def runBounded(s: SparkSession, df: DataFrame, name: String,
-                         mode: String): DataFrame =
-    runBoundedCounted(s, df, name, mode)._1
-
-  /** [[runBounded]] at an explicit shuffle-partition count — for the
-    * runs whose STATE WORK dominates state-store setup. The default 1
-    * is right for fixture-scale operator contracts (setup cost per
-    * store per batch swamps them), but q263 seeds the whole corpus
-    * bucket index through initial state: measured at sf0.1, p1 15.8 s
-    * / p4 6.7 s / p8 5.1 s / p32 38.2 s — seeding parallelizes until
-    * store setup takes over, so 8 is the knee. */
-  private def runBoundedParts(s: SparkSession, parts: String,
-                              df: DataFrame, name: String,
-                              mode: String): DataFrame =
-    runBoundedCounted(s, df, name, mode, parts)._1
+                         mode: String, rocksDb: Boolean = false): DataFrame =
+    runBoundedCounted(s, df, name, mode, rocksDb = rocksDb)._1
 
   /** [[runBounded]] plus the DATA-CARRYING micro-batch count of the
     * run. Consumers whose post-processing RE-AGGREGATES update-mode
@@ -92,12 +82,21 @@ object StreamingQueries {
     * dedup is not expressible sink-side — the single-batch contract is
     * asserted instead. Returned per-run (not stashed on the object) so
     * concurrent or interleaved runs can never read another query's
-    * count. */
+    * count.
+    *
+    * `parts` overrides the shuffle-partition count for the runs whose
+    * STATE WORK dominates state-store setup. The default 1 is right
+    * for fixture-scale operator contracts (setup cost per store per
+    * batch swamps them), but q263 seeds the whole corpus bucket index
+    * through initial state: measured at sf0.1, p1 15.8 s / p4 6.7 s /
+    * p8 5.1 s / p32 38.2 s — seeding parallelizes until store setup
+    * takes over, so 8 is the knee. */
   private def runBoundedCounted(s: SparkSession, df: DataFrame,
                                 name: String, mode: String,
-                                parts: String = streamShufflePartitions)
+                                parts: String = streamShufflePartitions,
+                                rocksDb: Boolean = false)
       : (DataFrame, Int) =
-    withStreamConf(s, parts) {
+    withStreamConf(s, parts, rocksDb) {
       s.sql(s"DROP VIEW IF EXISTS $name")
       val q = df.writeStream
         .format("memory")
@@ -121,17 +120,27 @@ object StreamingQueries {
       q: org.apache.spark.sql.streaming.StreamingQuery): Int =
     q.recentProgress.count(_.numInputRows > 0)
 
-  /** Scope the low streaming shuffle-partition setting to one bounded
-    * run; the session value is restored for the batch queries. */
+  /** Scope a bounded run's stream settings: the low shuffle-partition
+    * count and, with `rocksDb`, the RocksDB state-store provider
+    * (transformWithState's requirement). A streaming query fixes its
+    * SQL conf when it starts; the session values are restored for the
+    * batch queries once the run ends. Streams stay on the shared
+    * session because bounded runs on a session clone leaked listener-
+    * bus registrations (ROADMAP #6). */
   private def withStreamConf[A](s: SparkSession,
-      parts: String = streamShufflePartitions)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, parts)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+      parts: String = streamShufflePartitions,
+      rocksDb: Boolean = false)(body: => A): A = {
+    val settings = Seq("spark.sql.shuffle.partitions" -> parts) ++
+      Option.when(rocksDb)("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider"))
+    val prev = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -141,21 +150,6 @@ object StreamingQueries {
     * locations). */
   private def deleteRecursively(p: java.nio.file.Path): Unit =
     graft.Cleanup.deleteRecursively(p)
-
-  /** Scope the RocksDB state-store provider (transformWithState's
-    * requirement) to one bounded run — the [[withStreamConf]] shape
-    * shared by every stateful-processor twin. */
-  private def withRocksDbState[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** Train-once banded-signature artifact shared by the gate CONTRACT
     * queries (q268/q269/q271/q274) — the established pipeline-artifact
@@ -412,16 +406,8 @@ object StreamingQueries {
             .as("millis"))
         .as[EventStreams.EventMilli]
       val totals = EventStreams.runningTotals(s, ev)
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
-      try runBounded(s, totals.toDF(), "graft_q134_sink", "append")
-        .orderBy("event_id")
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
+      runBounded(s, totals.toDF(), "graft_q134_sink", "append",
+        rocksDb = true).orderBy("event_id")
     }),
 
     // Streaming twin of q166: per-user event-type chains fold through
@@ -436,9 +422,8 @@ object StreamingQueries {
           expr("unix_micros(ts)").as("us"), col("event_type"))
         .as[EventStreams.EventTyped]
       val steps = EventStreams.transitions(s, ev)
-      val sunk = withRocksDbState(s) {
-        runBounded(s, steps.toDF(), "graft_q171_sink", "append")
-      }
+      val sunk = runBounded(s, steps.toDF(), "graft_q171_sink", "append",
+        rocksDb = true)
       val counts = sunk.groupBy("from_type", "to_type")
         .agg(count(lit(1)).as("n_trans"))
       counts
@@ -490,9 +475,8 @@ object StreamingQueries {
           expr("unix_micros(ts)").as("us"), col("event_type"))
         .as[EventStreams.EventTyped]
       val gaps = EventStreams.interArrivalGaps(s, ev)
-      val sunk = withRocksDbState(s) {
-        runBounded(s, gaps.toDF(), "graft_q207_sink", "append")
-      }
+      val sunk = runBounded(s, gaps.toDF(), "graft_q207_sink", "append",
+        rocksDb = true)
       sunk.groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_gaps"),
           sum(col("gap_s")).as("_sg"),
@@ -524,9 +508,8 @@ object StreamingQueries {
           graft.operators.Dedup.digest64(col("user_id").cast("string")).as("h"))
         .as[EventStreams.KeyedHash]
       val sk = EventStreams.kmvSketchStream(s, ev, k = 64)
-      val sunk = withRocksDbState(s) {
-        runBounded(s, sk.toDF(), "graft_q212_sink", "append")
-      }
+      val sunk = runBounded(s, sk.toDF(), "graft_q212_sink", "append",
+        rocksDb = true)
       graft.operators.Sketch.kmvEstimate(
           sunk.select(col("k").as("event_type"), col("h")),
           Seq("event_type"), 64)
@@ -545,9 +528,8 @@ object StreamingQueries {
           expr("unix_micros(ts)").as("us"), col("event_type"))
         .as[EventStreams.EventTyped]
       val advances = EventStreams.funnelStages(s, ev, stages)
-      val sunk = withRocksDbState(s) {
-        runBounded(s, advances.toDF(), "graft_q241_sink", "append")
-      }
+      val sunk = runBounded(s, advances.toDF(), "graft_q241_sink",
+        "append", rocksDb = true)
       val maxStage = sunk.groupBy("user_id").agg(max("stage").as("_ms"))
       val names = "all" +: stages
       (0 to stages.length).map { k =>
@@ -614,9 +596,8 @@ object StreamingQueries {
         .as[EventStreams.MetricObs]
       val out = EventStreams.cusumShiftStream(s, obs,
         thresholdCents = 50000L)
-      val sunk = withRocksDbState(s) {
-        runBounded(s, out.toDF(), "graft_q260_sink", "append")
-      }
+      val sunk = runBounded(s, out.toDF(), "graft_q260_sink", "append",
+        rocksDb = true)
       val last = Window.partitionBy("event_type")
         .orderBy((col("n") + col("n_excluded")).desc)
       sunk.withColumn("_rn", row_number().over(last))
@@ -653,9 +634,8 @@ object StreamingQueries {
       // p8 4.1 s retimed — the cold gate's cost is banding + engine
       // overhead, not store-parallelizable seeding, so the low
       // store-count default wins here.
-      withRocksDbState(s) {
-        runBounded(s, out.toDF(), "graft_q261_sink", "append")
-      }.distinct()
+      runBounded(s, out.toDF(), "graft_q261_sink", "append",
+        rocksDb = true).distinct()
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -705,10 +685,9 @@ object StreamingQueries {
       val out = graft.streaming.DocStreams.nearDupGateBooted(
         s, banded, init, k = 24, minAgree = 12)
       // p8: corpus-index seeding dominates this run, and it
-      // parallelizes across state stores — see runBoundedParts
-      withRocksDbState(s) {
-        runBoundedParts(s, "8", out.toDF(), "graft_q263_sink", "append")
-      }.distinct()
+      // parallelizes across state stores — see runBoundedCounted
+      runBoundedCounted(s, out.toDF(), "graft_q263_sink", "append",
+        parts = "8", rocksDb = true)._1.distinct()
         .orderBy("doc_a", "doc_b")
     }),
 
@@ -764,9 +743,8 @@ object StreamingQueries {
       val sessions = EventStreams.timerSessionize(s, ev, gapMinutes = 30,
         watermarkDelay = "10 minutes")
       val w = Window.partitionBy("user_id").orderBy("start_us")
-      withRocksDbState(s) {
-        runBounded(s, sessions.toDF(), "graft_q266_sink", "append")
-      }
+      runBounded(s, sessions.toDF(), "graft_q266_sink", "append",
+        rocksDb = true)
         .select(col("user_id"),
           row_number().over(w).cast("long").as("session_seq"),
           col("n_events"))
@@ -789,9 +767,8 @@ object StreamingQueries {
           expr("unix_micros(ts)").as("us"), col("event_type"))
         .as[EventStreams.EventTyped]
       val out = EventStreams.typeHistogramStream(s, ev)
-      val sunk = withRocksDbState(s) {
-        runBounded(s, out.toDF(), "graft_q267_sink", "append")
-      }
+      val sunk = runBounded(s, out.toDF(), "graft_q267_sink", "append",
+        rocksDb = true)
       val last = Window.partitionBy("user_id", "event_type")
         .orderBy(col("n").desc)
       sunk.withColumn("_rn", row_number().over(last))
@@ -819,9 +796,8 @@ object StreamingQueries {
       val banded = bandedStream(s, dir)
       val out = graft.streaming.DocStreams.nearDupGate(s, banded,
         k = 24, minAgree = 12, cap = 2)
-      val (sunk, dataBatches) = withRocksDbState(s) {
-        runBoundedCounted(s, out.toDF(), "graft_q268_sink", "append")
-      }
+      val (sunk, dataBatches) = runBoundedCounted(s, out.toDF(),
+        "graft_q268_sink", "append", rocksDb = true)
       require(dataBatches == 1,
         s"q268's capped-admission oracle assumes doc_id arrival order " +
           s"(single-batch fixture); got $dataBatches data batches")
@@ -846,9 +822,8 @@ object StreamingQueries {
       val m = graft.streaming.DocStreams.GateMetrics(s)
       val out = graft.streaming.DocStreams.nearDupGate(s, banded,
         k = 24, minAgree = 12, cap = 2, metrics = Some(m))
-      val (sunk, dataBatches) = withRocksDbState(s) {
-        runBoundedCounted(s, out.toDF(), "graft_q269_sink", "append")
-      }
+      val (sunk, dataBatches) = runBoundedCounted(s, out.toDF(),
+        "graft_q269_sink", "append", rocksDb = true)
       require(dataBatches == 1,
         s"q269's occupancy oracle assumes doc_id arrival order " +
           s"(single-batch fixture); got $dataBatches data batches")
@@ -890,7 +865,7 @@ object StreamingQueries {
       val out = graft.streaming.DocStreams.observedGate(
         graft.streaming.DocStreams.nearDupGate(s, banded,
           k = 24, minAgree = 12, cap = 2))
-      withRocksDbState(s) { withStreamConf(s) {
+      withStreamConf(s, rocksDb = true) {
         val q = out.toDF().writeStream.format("noop")
           .outputMode("append")
           .trigger(Trigger.AvailableNow())
@@ -907,7 +882,7 @@ object StreamingQueries {
         Seq(("n_pairs", obs.map(_.getAs[Long]("n_pairs")).sum),
             ("n_sentinels", obs.map(_.getAs[Long]("n_sentinels")).sum))
           .toDF("metric", "n").orderBy("metric")
-      } }
+      }
     }),
 
     // Streaming twin #24 — OFFLINE STATE AUDIT (r15): the capped
@@ -937,15 +912,13 @@ object StreamingQueries {
       val out = EventStreams.typeHistogramStream(s, ev)
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_q279_ckpt")
-      try withRocksDbState(s) {
-        withStreamConf(s) {
-          val q = out.toDF().writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+      try withStreamConf(s, rocksDb = true) {
+        val q = out.toDF().writeStream.format("noop")
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
         // materialize BEFORE the checkpoint dir is deleted
         EventStreams.typeHistState(s, ckpt.toString)
           .localCheckpoint()
@@ -959,22 +932,20 @@ object StreamingQueries {
         k = 24, minAgree = 12, cap = 2)
       val ckpt = java.nio.file.Files
         .createTempDirectory("graft_q271_ckpt")
-      try withRocksDbState(s) {
-        withStreamConf(s) {
-          val q = out.toDF().writeStream.format("noop")
-            .option("checkpointLocation", ckpt.toString)
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          // same guard as q268: the occupancy oracle assumes doc_id
-          // ADMISSION order, which only a single data batch guarantees
-          // — fail by name, not as an opaque hash mismatch
-          val dataBatches = dataBatchCount(q)
-          require(dataBatches == 1,
-            s"q271's occupancy oracle assumes doc_id arrival order " +
-              s"(single-batch fixture); got $dataBatches data batches")
-        }
+      try withStreamConf(s, rocksDb = true) {
+        val q = out.toDF().writeStream.format("noop")
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode("append")
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+        // same guard as q268: the occupancy oracle assumes doc_id
+        // ADMISSION order, which only a single data batch guarantees
+        // — fail by name, not as an opaque hash mismatch
+        val dataBatches = dataBatchCount(q)
+        require(dataBatches == 1,
+          s"q271's occupancy oracle assumes doc_id arrival order " +
+            s"(single-batch fixture); got $dataBatches data batches")
         val residents = graft.streaming.DocStreams
           .gateStateResidents(s, ckpt.toString)
           .select(lit("resident").as("kind"), col("band"),

@@ -7,14 +7,19 @@ import org.apache.spark.sql.classic
 
 /** Accessors for the `private[sql]` members a library needs to build
   * plans and columns from Catalyst nodes: `Dataset.ofRows` (custom
-  * operators in `graft.plans`) and `ExpressionUtils` (graft's native
+  * operators in `graft.plans`), `ExpressionUtils` (graft's native
   * expressions in `graft.functions`, which become Columns directly —
-  * no function registry, so any session analyzes them). Nothing else
-  * from the private surface is touched.
+  * no function registry, so any session analyzes them) and
+  * `cloneSession` (a private session to plan on, so a plan-local
+  * setting never touches the caller's conf — [[graft.Checkpoints]]).
+  * Nothing else from the private surface is touched.
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
 
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 

@@ -30,7 +30,7 @@ class CloneSessionSpec extends SparkTestBase {
       "wordShingleMultiset" ->
         (Dedup.wordShingleMultiset(text, 3), ReferenceChains.wordNgrams(text, 3)),
       "ringAssign" ->
-        (Layout.ringAssign(clone, kh, ring), ReferenceChains.ringLookup(kh, ring)),
+        (Layout.ringAssign(kh, ring), ReferenceChains.ringLookup(kh, ring)),
       "fingerprint" ->
         (col("robust_digest"), md5(ReferenceChains.winnow4Md5(text))))
     val frame = docs

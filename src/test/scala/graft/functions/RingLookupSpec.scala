@@ -38,7 +38,7 @@ class RingLookupSpec extends SparkTestBase {
     for (shards <- Seq(8, 9); vnodes <- Seq(16)) {
       val ring = Layout.hashRing(shards, vnodes)
       val diff = keys.select(
-        Layout.ringAssign(spark, col("kh"), ring).as("fast"),
+        Layout.ringAssign(col("kh"), ring).as("fast"),
         ReferenceChains.ringLookup(col("kh"), ring).as("want"))
         .filter(col("fast") =!= col("want"))
       assert(diff.count() == 0, s"shards=$shards")
