@@ -322,8 +322,13 @@ object LineageCapture {
           }
         // outside the landing try: a trigger hiccup must never make a
         // SUCCESSFUL flush restore its rows and double them later
-        if (landed) maybeAutoCompactReads(spark, storeDir,
-          errorCounterFor(spark, storeDir))
+        if (landed)
+          maybeAutoMaintain(spark, storeDir,
+            "spark.graft.lineage.autocompact.reads.every",
+            errorCounterFor(spark, storeDir)) {
+            LineageStore.compactReads(spark, storeDir,
+              cleanupGraceMs = LineageStore.DefaultPurgeGraceMs)
+          }
       }
     }
 
@@ -468,64 +473,36 @@ object LineageCapture {
       t
     })
 
-  private val writesSinceCompact = new java.util.concurrent
-    .ConcurrentHashMap[String, AtomicLong]()
-  private val flushesSinceCompact = new java.util.concurrent
-    .ConcurrentHashMap[String, AtomicLong]()
+  /** Per (trigger conf key, store): events since the last trigger. */
+  private val sinceMaintain = new java.util.concurrent
+    .ConcurrentHashMap[(String, String), AtomicLong]()
 
-  /** Opt-in AUTO-compaction: with
+  /** Opt-in AUTO-maintenance: with
     * `spark.graft.lineage.autocompact.every = N`, every Nth captured
     * write triggers `LineageStore.compact(…, upToRun = <that run>)`
     * off-bus — the store's probe-measured consolidation curves become
-    * the DEFAULT experience, not the well-operated one. The trigger
-    * runs under the `_maintain` lease like any maintainer: a lease
-    * held elsewhere skips this round (the next trigger retries);
-    * genuine failures tick `capture_errors` and never touch the write
-    * path. Unset (the default), nothing changes: maintenance stays
-    * operator-driven. */
-  private def maybeAutoCompact(spark: SparkSession, storeDir: String,
-                               upToRun: Long, errors: AtomicLong): Unit =
-    spark.conf.getOption("spark.graft.lineage.autocompact.every")
+    * the DEFAULT experience, not the well-operated one — and with
+    * `spark.graft.lineage.autocompact.reads.every = M` every Mth
+    * successful read-log flush triggers `LineageStore.compactReads`.
+    * The trigger runs under the `_maintain` lease like any maintainer:
+    * a lease held elsewhere skips this round (the next trigger
+    * retries); genuine failures tick `capture_errors` and never touch
+    * the write path. Unset (the default), nothing changes: maintenance
+    * stays operator-driven. */
+  private def maybeAutoMaintain(spark: SparkSession, storeDir: String,
+                                key: String, errors: AtomicLong)(
+                                maintain: => Any): Unit =
+    spark.conf.getOption(key)
       .flatMap(_.toLongOption).filter(_ > 0).foreach { n =>
-        val c = writesSinceCompact.computeIfAbsent(
-          storeKey(spark, storeDir), _ => new AtomicLong(0L))
+        val c = sinceMaintain.computeIfAbsent(
+          (key, storeKey(spark, storeDir)), _ => new AtomicLong(0L))
         if (c.incrementAndGet() >= n) {
           c.set(0L)
           maintenanceExec.submit(new Runnable {
             def run(): Unit =
-              // purge-grace deferred cleanup: the in-process trigger
-              // races the observed application's OWN reads by
-              // construction — folded units must outlive any scan that
-              // listed them before the fold committed
-              try { LineageStore.compact(spark, storeDir, upToRun,
-                cleanupGraceMs = LineageStore.DefaultPurgeGraceMs); () }
+              try { maintain; () }
               catch {
                 case _: MaintenanceBusyException => () // next Nth retries
-                case _: Exception => errors.incrementAndGet()
-              }
-          })
-          ()
-        }
-      }
-
-  /** The read-log twin: `spark.graft.lineage.autocompact.reads.every
-    * = M` folds the flush directories (`LineageStore.compactReads`)
-    * after every Mth successful read-log flush. */
-  private def maybeAutoCompactReads(spark: SparkSession,
-                                    storeDir: String,
-                                    errors: AtomicLong): Unit =
-    spark.conf.getOption("spark.graft.lineage.autocompact.reads.every")
-      .flatMap(_.toLongOption).filter(_ > 0).foreach { m =>
-        val c = flushesSinceCompact.computeIfAbsent(
-          storeKey(spark, storeDir), _ => new AtomicLong(0L))
-        if (c.incrementAndGet() >= m) {
-          c.set(0L)
-          maintenanceExec.submit(new Runnable {
-            def run(): Unit =
-              try { LineageStore.compactReads(spark, storeDir,
-                cleanupGraceMs = LineageStore.DefaultPurgeGraceMs); () }
-              catch {
-                case _: MaintenanceBusyException => ()
                 case _: Exception => errors.incrementAndGet()
               }
           })
@@ -708,7 +685,15 @@ object LineageCapture {
                 LineageParser.toDataset(spark,
                   Seq(r.copy(statementIndex = run.toInt))))
               emitOpenLineage(spark, storeDir, run, r, metadata, errors)
-              maybeAutoCompact(spark, storeDir, run, errors)
+              maybeAutoMaintain(spark, storeDir,
+                "spark.graft.lineage.autocompact.every", errors) {
+                // purge-grace deferred cleanup: the in-process trigger
+                // races the observed application's OWN reads by
+                // construction — folded units must outlive any scan
+                // that listed them before the fold committed
+                LineageStore.compact(spark, storeDir, run,
+                  cleanupGraceMs = LineageStore.DefaultPurgeGraceMs)
+              }
             } else throw new IllegalStateException(
               s"capture run id $run exceeds the v1 edge contract's Int " +
                 "stmt field — archive and restart the store")

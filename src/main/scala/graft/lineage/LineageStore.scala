@@ -1,6 +1,6 @@
 package graft.lineage
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -176,35 +176,11 @@ object LineageStore {
       .write.mode("append").parquet(part.toString)
     val hconf = spark.sessionState.newHadoopConf()
     var stmtIsRun = true
-    filesystem.listStatus(part).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach { st =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, hconf))
-        val (rows, identity) = try {
-          import scala.jdk.CollectionConverters._
-          val blocks = reader.getFooter.getBlocks.asScala
-          val ok = blocks.forall { b =>
-            b.getColumns.asScala
-              .find(_.getPath.toDotString == "stmt")
-              .exists { c =>
-                val s = c.getStatistics
-                s != null && !s.isEmpty &&
-                  s.genericGetMin.asInstanceOf[Number]
-                    .longValue() == runId &&
-                  s.genericGetMax.asInstanceOf[Number]
-                    .longValue() == runId
-              }
-          }
-          (reader.getRecordCount, ok)
-        } finally reader.close()
-        if (rows == 0L) filesystem.delete(st.getPath, false)
-        else stmtIsRun &&= identity
-      }
+    dataFiles(filesystem, part).foreach { st =>
+      val (rows, groups) = footer(hconf, st, "stmt")
+      if (rows == 0L) filesystem.delete(st.getPath, false)
+      else stmtIsRun &&= groups.forall(_.contains((runId, runId)))
+    }
     // The commit marker makes "this id was appended" independent of
     // whether the append produced files (a ZERO-edge run writes none)
     // — without it a later append could silently REUSE a zero-edge
@@ -236,27 +212,26 @@ object LineageStore {
     }
   }
 
-  /** Do ALL of `st`'s row groups carry `stmt` statistics pinned to
-    * exactly `id`? (Footer-only — no data read, no Spark job.) */
-  private def stmtFooterEquals(
-      hconf: org.apache.hadoop.conf.Configuration,
-      st: org.apache.hadoop.fs.FileStatus, id: Long): Boolean = {
+  /** A parquet file's row count and, per row group, the (min, max)
+    * of `column` — None for a group without usable statistics.
+    * Footer-only — no data read, no Spark job. */
+  private def footer(hconf: org.apache.hadoop.conf.Configuration,
+                     st: FileStatus, column: String)
+      : (Long, Seq[Option[(Long, Long)]]) = {
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
       org.apache.parquet.hadoop.util.HadoopInputFile
         .fromStatus(st, hconf))
     try {
       import scala.jdk.CollectionConverters._
-      val blocks = reader.getFooter.getBlocks.asScala
-      blocks.nonEmpty && blocks.forall { b =>
-        b.getColumns.asScala
-          .find(_.getPath.toDotString == "stmt")
-          .exists { c =>
-            val s = c.getStatistics
-            s != null && !s.isEmpty &&
-              s.genericGetMin.asInstanceOf[Number].longValue() == id &&
-              s.genericGetMax.asInstanceOf[Number].longValue() == id
-          }
-      }
+      (reader.getRecordCount,
+        reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+          b.getColumns.asScala
+            .find(_.getPath.toDotString == column)
+            .map(_.getStatistics)
+            .filter(s => s != null && !s.isEmpty)
+            .map(s => (s.genericGetMin.asInstanceOf[Number].longValue(),
+              s.genericGetMax.asInstanceOf[Number].longValue()))
+        })
     } finally reader.close()
   }
 
@@ -273,11 +248,12 @@ object LineageStore {
     if (readManifest(filesystem, root).nonEmpty) return false
     val hconf = spark.sessionState.newHadoopConf()
     partitionInfos(filesystem, root).filter(_.hasData).forall { p =>
-      val part = new Path(root, s"run_id=${p.id}")
-      filesystem.listStatus(part).toSeq.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.forall(st => stmtFooterEquals(hconf, st, p.id))
+      // every row group of every file carries `stmt` stats pinned to
+      // exactly the run id
+      dataFiles(filesystem, new Path(root, s"run_id=${p.id}")).forall { st =>
+        val groups = footer(hconf, st, "stmt")._2
+        groups.nonEmpty && groups.forall(_.contains((p.id, p.id)))
+      }
     }
   }
 
@@ -394,10 +370,7 @@ object LineageStore {
       // here — the content is identical either way, and a failed
       // create just falls through to the check below
       try {
-        val out = filesystem.create(p, true)
-        try out.write(
-          LineageEdgeSchema.Version.toString.getBytes("UTF-8"))
-        finally out.close()
+        writeText(filesystem, p, LineageEdgeSchema.Version.toString)
         return
       } catch { case _: java.io.IOException => () }
     }
@@ -409,11 +382,8 @@ object LineageStore {
     var v = ""
     var tries = 0
     while (v.isEmpty && tries < 20) {
-      v = try {
-        val in = filesystem.open(p)
-        try new String(in.readAllBytes(), "UTF-8").trim
-        finally in.close()
-      } catch { case _: java.io.FileNotFoundException => "" }
+      v = try readText(filesystem, p).trim
+        catch { case _: java.io.FileNotFoundException => "" }
       if (v.isEmpty) { tries += 1; Thread.sleep(10) }
     }
     require(v.nonEmpty,
@@ -429,11 +399,7 @@ object LineageStore {
                           root: Path): Option[String] = {
     val p = new Path(root, "_schema_version")
     if (!filesystem.exists(p)) None
-    else {
-      val in = filesystem.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim)
-      finally in.close()
-    }
+    else Some(readText(filesystem, p).trim)
   }
 
   /** Writes (and reads with no registered rewrite) refuse a store
@@ -519,22 +485,15 @@ object LineageStore {
     def classify(unit: Path): (String, Seq[Path], Seq[Path]) = {
       val children = filesystem.listStatus(unit).toSeq
       val names = children.map(_.getPath.getName)
-      val dataFiles = children.filter { c =>
-        val n = c.getPath.getName
-        c.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.map(_.getPath)
+      val files = children.filter(isDataFile).map(_.getPath)
       val stage = new Path(unit, "_migrate_stage")
       if (names.contains(unitMarker) && filesystem.exists(stage)) {
-        val staged = filesystem.listStatus(stage).toSeq.filter { c =>
-          val n = c.getPath.getName
-          c.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.map(_.getPath)
-        ("stage", dataFiles.filter(_.getName.startsWith(prefix)), staged)
+        val staged = dataFiles(filesystem, stage).map(_.getPath)
+        ("stage", files.filter(_.getName.startsWith(prefix)), staged)
       } else if (names.contains(unitMarker) ||
-          (dataFiles.nonEmpty &&
-            dataFiles.forall(_.getName.startsWith(prefix))))
-        ("new", dataFiles, Seq.empty)
-      else ("old", dataFiles, Seq.empty)
+          (files.nonEmpty && files.forall(_.getName.startsWith(prefix))))
+        ("new", files, Seq.empty)
+      else ("old", files, Seq.empty)
     }
     val liveParts = partitionInfos(filesystem, root)
       .filterNot(_.vacuumed)
@@ -545,19 +504,17 @@ object LineageStore {
       .map(s => new Path(compactedDir(root), s))
       .filter(filesystem.exists)
       .map(p => classify(p))
-    def basePathRead(ids: Seq[Long]) = spark.read
-      .option("basePath", storeDir)
-      .parquet(ids.map(r => s"$storeDir/run_id=$r"): _*)
-      .withColumn("run_id", col("run_id").cast("long"))
     val pieces = Seq.newBuilder[DataFrame]
     val oldParts = partStates.collect {
       case (id, ("old", files, _)) if files.nonEmpty => id }
     if (oldParts.nonEmpty)
-      pieces += rewrite(basePathRead(oldParts)).select(ordered: _*)
+      pieces += rewrite(readPartitions(spark, storeDir, oldParts))
+        .select(ordered: _*)
     val newParts = partStates.collect {
       case (id, ("new", files, _)) if files.nonEmpty => id }
     if (newParts.nonEmpty)
-      pieces += basePathRead(newParts).select(ordered: _*)
+      pieces += readPartitions(spark, storeDir, newParts)
+        .select(ordered: _*)
     partStates.foreach {
       case (id, ("stage", swapped, staged))
           if (swapped ++ staged).nonEmpty =>
@@ -663,14 +620,10 @@ object LineageStore {
     def migrateUnit(unit: Path, withRunCol: Boolean): Boolean = {
       val stage = new Path(unit, "_migrate_stage")
       val marker = new Path(unit, unitMarker)
-      def dataFiles() = filesystem.listStatus(unit).toSeq.filter { c =>
-        val n = c.getPath.getName
-        c.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
       if (filesystem.exists(marker)) {
         if (!filesystem.exists(stage)) return false // committed + swapped
       } else {
-        val olds = dataFiles()
+        val olds = dataFiles(filesystem, unit)
         if (olds.isEmpty) { // zero-edge / claim-only: nothing to rewrite
           filesystem.create(marker, true).close()
           return false
@@ -694,27 +647,17 @@ object LineageStore {
         // a SEGMENT may hold years of folded edges — keep compact's
         // sorted target-size range partitioning rather than funneling
         // it through one task
-        val shaped =
-          if (!withRunCol) rewritten.coalesce(1)
-          else {
-            val nFiles = math.max(1L,
-              (olds.map(_.getLen).sum + (128L << 20) - 1) /
-                (128L << 20)).toInt
-            rewritten
-              .repartitionByRange(nFiles, col("run_id"), col("stmt"))
-              .sortWithinPartitions("run_id", "stmt")
-          }
-        shaped.write.parquet(stage.toString)
+        if (!withRunCol) rewritten.coalesce(1).write.parquet(stage.toString)
+        else writeSegment(rewritten, stage.toString,
+          olds.map(_.getLen).sum, EdgeSegmentKeys)
         filesystem.create(marker, true).close() // unit commit point
       }
       // swap: drop old files (never prefix-named), lift staged files
       // in under the version prefix — idempotent from any crash
-      dataFiles().filterNot(_.getPath.getName.startsWith(prefix))
+      dataFiles(filesystem, unit)
+        .filterNot(_.getPath.getName.startsWith(prefix))
         .foreach(f => filesystem.delete(f.getPath, false))
-      filesystem.listStatus(stage).toSeq.filter { c =>
-        val n = c.getPath.getName
-        c.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.foreach { f =>
+      dataFiles(filesystem, stage).foreach { f =>
         filesystem.rename(f.getPath,
           new Path(unit, prefix + f.getPath.getName))
       }
@@ -736,8 +679,7 @@ object LineageStore {
     // version stamp flips LAST; the marker lifts after it — a crash
     // between the two leaves a store that re-runs migrate as a no-op
     // sweep and then lifts the marker
-    val out = filesystem.create(new Path(root, "_schema_version"), true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    writeText(filesystem, new Path(root, "_schema_version"), v.toString)
     // unit markers are working state, not layout — sweep them
     (parts ++ segs).foreach(u =>
       filesystem.delete(new Path(u, unitMarker), false))
@@ -778,6 +720,67 @@ object LineageStore {
     (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
   }
 
+  /** Spark's parquet listing skips names starting `_` or `.`, so every
+    * piece of store metadata hides behind one. */
+  private def visible(name: String): Boolean =
+    !name.startsWith("_") && !name.startsWith(".")
+
+  private def isDataFile(st: FileStatus): Boolean =
+    st.isFile && visible(st.getPath.getName)
+
+  /** The data files directly inside directory `dir`. */
+  private def dataFiles(filesystem: FileSystem, dir: Path)
+      : Seq[FileStatus] =
+    filesystem.listStatus(dir).toSeq.filter(isDataFile)
+
+  private def readText(filesystem: FileSystem, p: Path): String = {
+    val in = filesystem.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  private def writeText(filesystem: FileSystem, p: Path,
+                        text: String): Unit = {
+    val out = filesystem.create(p, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** A file of `key<TAB>value` lines (the manifests, the lease). */
+  private def readFields(filesystem: FileSystem, p: Path)
+      : Map[String, String] =
+    readText(filesystem, p).linesIterator.map(_.split("\t", 2))
+      .collect { case Array(a, b) => a -> b }.toMap
+
+  private def writeFields(filesystem: FileSystem, p: Path,
+                          fields: (String, String)*): Unit =
+    writeText(filesystem, p,
+      fields.map { case (k, v) => s"$k\t$v\n" }.mkString)
+
+  /** The latest `<prefix><k>` fields file in `dir`, as (k, fields):
+    * versioned by filename, max k wins, so a half-written successor
+    * never hides a committed predecessor. */
+  private def readLatest(filesystem: FileSystem, dir: Path,
+                         prefix: String)
+      : Option[(Int, Map[String, String])] =
+    if (!filesystem.exists(dir)) None
+    else filesystem.listStatus(dir).toSeq
+      .map(_.getPath.getName)
+      .filter(_.startsWith(prefix))
+      .flatMap(n => n.stripPrefix(prefix).toIntOption.map(_ -> n))
+      .sortBy(_._1).lastOption
+      .map { case (k, n) => k -> readFields(filesystem, new Path(dir, n)) }
+
+  private def writeLatest(filesystem: FileSystem, dir: Path,
+                          prefix: String, k: Int,
+                          fields: (String, String)*): Unit = {
+    filesystem.mkdirs(dir)
+    writeFields(filesystem, new Path(dir, s"$prefix$k"), fields: _*)
+  }
+
+  /** A comma-separated list field; absent reads as empty. */
+  private def listField(fields: Map[String, String],
+                        key: String): Seq[String] =
+    fields.getOrElse(key, "").split(",").toSeq.filter(_.nonEmpty)
+
   /** One partition directory's standing, from a SINGLE child listing
     * — the bulk read paths must not pay one `exists(_vacuumed)` plus
     * one `listStatus` per partition (2N+1 metadata RPCs on a
@@ -794,15 +797,12 @@ object LineageStore {
       .map { st =>
         val id = st.getPath.getName.stripPrefix("run_id=").toLong
         val children = filesystem.listStatus(st.getPath).toSeq
-        val dataFiles = children.filter { c =>
-          val n = c.getPath.getName
-          c.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
+        val files = children.filter(isDataFile)
         PartInfo(id,
-          hasData = dataFiles.nonEmpty,
+          hasData = files.nonEmpty,
           vacuumed = children.exists(
             _.getPath.getName == "_vacuumed"),
-          dataBytes = dataFiles.map(_.getLen).sum)
+          dataBytes = files.map(_.getLen).sum)
       }.sortBy(_.id)
 
   /** Run ids present as partition directories (claimed, zero-edge, and
@@ -824,10 +824,7 @@ object LineageStore {
   private def partitionHasData(filesystem: FileSystem, root: Path,
                                r: Long): Boolean = {
     val part = new Path(root, s"run_id=$r")
-    filesystem.exists(part) && filesystem.listStatus(part).exists { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
+    filesystem.exists(part) && filesystem.listStatus(part).exists(isDataFile)
   }
 
   /** Run ids present — live partition directories plus runs folded
@@ -884,6 +881,16 @@ object LineageStore {
       readManifest(filesystem, root).exists(_.containsRun(runId))
   }
 
+  /** Run partitions `ids` in one scan under the store's base path,
+    * `run_id` derived from the directory name and cast to BIGINT
+    * (partition inference would otherwise narrow it to INT). */
+  private def readPartitions(spark: SparkSession, storeDir: String,
+                             ids: Seq[Long]): DataFrame =
+    spark.read
+      .option("basePath", storeDir)
+      .parquet(ids.map(r => s"$storeDir/run_id=$r"): _*)
+      .withColumn("run_id", col("run_id").cast("long"))
+
   /** All stored edges with their `run_id` — live partitions (cast to
     * BIGINT; partition inference would otherwise narrow the directory
     * value to INT) unioned with compacted segments (where `run_id` is
@@ -914,10 +921,7 @@ object LineageStore {
     val ordered = (edgeCols :+ "run_id").map(col)
     val partDf =
       if (liveParts.isEmpty) None
-      else Some(spark.read
-        .option("basePath", storeDir)
-        .parquet(liveParts.map(r => s"$storeDir/run_id=$r"): _*)
-        .withColumn("run_id", col("run_id").cast("long"))
+      else Some(readPartitions(spark, storeDir, liveParts)
         .select(ordered: _*))
     val segDf = m.filter(_.segments.nonEmpty).map { mm =>
       spark.read
@@ -1033,12 +1037,8 @@ object LineageStore {
       val dead = supersededRuns(spark, storeDir)
       val (filesystem, root) = fs(spark, storeDir)
       val stamp = System.currentTimeMillis()
-      dead.foreach { r =>
-        val out = filesystem.create(
-          new Path(root, s"run_id=$r/_vacuumed"), true)
-        try out.write(stamp.toString.getBytes("UTF-8"))
-        finally out.close()
-      }
+      dead.foreach(r => writeText(filesystem,
+        new Path(root, s"run_id=$r/_vacuumed"), stamp.toString))
       dead
     }
 
@@ -1060,12 +1060,9 @@ object LineageStore {
       partitionRuns(filesystem, root)
         .filter { r =>
           val marker = new Path(root, s"run_id=$r/_vacuumed")
-          filesystem.exists(marker) && {
-            val in = filesystem.open(marker)
-            val ts = try new String(in.readAllBytes(), "UTF-8").trim
-              finally in.close()
-            ts.toLongOption.exists(t => now - t >= graceMs)
-          }
+          filesystem.exists(marker) &&
+            readText(filesystem, marker).trim.toLongOption
+              .exists(t => now - t >= graceMs)
         }
         .map { r =>
           filesystem.delete(new Path(root, s"run_id=$r"), true)
@@ -1104,11 +1101,7 @@ object LineageStore {
           try filesystem.listStatus(part).toSeq
           catch { case _: java.io.FileNotFoundException => Seq.empty }
         val names = children.map(_.getPath.getName)
-        val hasData = children.exists { c =>
-          val n = c.getPath.getName
-          c.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        !hasData && !names.contains("_committed") &&
+        !children.exists(isDataFile) && !names.contains("_committed") &&
           children.exists(c => c.getPath.getName == "_claim" &&
             c.getModificationTime < cutoff)
       }
@@ -1164,6 +1157,12 @@ object LineageStore {
 
   private def leasePath(root: Path) = new Path(root, "_maintain")
 
+  private def writeLease(filesystem: FileSystem, lease: Path,
+                         holder: String, op: String,
+                         leaseMs: Long): Unit =
+    writeFields(filesystem, lease, "holder" -> holder, "op" -> op,
+      "deadline" -> (System.currentTimeMillis() + leaseMs).toString)
+
   /** (holder, op, deadline) from the lease file; an empty or
     * half-written lease (content lands one step after the atomic
     * create) is judged by its mtime plus the default window. */
@@ -1171,11 +1170,7 @@ object LineageStore {
       : Option[(String, String, Long)] =
     try {
       val st = filesystem.getFileStatus(lease)
-      val in = filesystem.open(lease)
-      val text = try new String(in.readAllBytes(), "UTF-8")
-        finally in.close()
-      val fields = text.linesIterator.map(_.split("\t", 2))
-        .collect { case Array(a, b) => a -> b }.toMap
+      val fields = readFields(filesystem, lease)
       Some((fields.getOrElse("holder", "?"),
         fields.getOrElse("op", "?"),
         fields.get("deadline").flatMap(_.toLongOption)
@@ -1201,10 +1196,7 @@ object LineageStore {
     while (attempts < 20) {
       attempts += 1
       if (atomicCreate(filesystem, lease)) {
-        val out = filesystem.create(lease, true)
-        try out.write((s"holder\t$me\nop\t$op\ndeadline\t${
-          System.currentTimeMillis() + leaseMs}\n").getBytes("UTF-8"))
-        finally out.close()
+        writeLease(filesystem, lease, me, op, leaseMs)
         return me
       }
       leaseInfo(filesystem, lease) match {
@@ -1248,12 +1240,7 @@ object LineageStore {
     val (filesystem, root) = fs(spark, storeDir)
     val lease = leasePath(root)
     leaseInfo(filesystem, lease).foreach { case (h, _, _) =>
-      if (h == holder) {
-        val out = filesystem.create(lease, true)
-        try out.write((s"holder\t$holder\nop\t$op\ndeadline\t${
-          System.currentTimeMillis() + leaseMs}\n").getBytes("UTF-8"))
-        finally out.close()
-      }
+      if (h == holder) writeLease(filesystem, lease, holder, op, leaseMs)
     }
   }
 
@@ -1398,40 +1385,60 @@ object LineageStore {
   private def compactedDir(root: Path) = new Path(root, "_compacted")
 
   private def readManifest(filesystem: FileSystem, root: Path)
-      : Option[Manifest] = {
-    val dir = compactedDir(root)
-    if (!filesystem.exists(dir)) None
-    else {
-      val named = filesystem.listStatus(dir).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith("_manifest_"))
-        .flatMap(n => n.stripPrefix("_manifest_").toIntOption.map(_ -> n))
-      named.sortBy(_._1).lastOption.map { case (k, name) =>
-        val in = filesystem.open(new Path(dir, name))
-        val text = try new String(in.readAllBytes(), "UTF-8")
-          finally in.close()
-        val fields = text.linesIterator
-          .map(_.split("\t", 2)).collect { case Array(a, b) => a -> b }
-          .toMap
-        Manifest(k,
-          fields.getOrElse("segments", "").split(",").toSeq
-            .filter(_.nonEmpty),
+      : Option[Manifest] =
+    readLatest(filesystem, compactedDir(root), "_manifest_").map {
+      case (k, fields) =>
+        Manifest(k, listField(fields, "segments"),
           parseRanges(fields.getOrElse("runs", "")))
-      }
     }
-  }
 
   private def writeManifest(filesystem: FileSystem, root: Path,
-                            m: Manifest): Unit = {
-    val dir = compactedDir(root)
-    filesystem.mkdirs(dir)
-    val out = filesystem.create(
-      new Path(dir, s"_manifest_${m.index}"), true)
-    try out.write(
-      (s"segments\t${m.segments.mkString(",")}\n" +
-        s"runs\t${renderRanges(m.ranges)}\n").getBytes("UTF-8"))
-    finally out.close()
+                            m: Manifest): Unit =
+    writeLatest(filesystem, compactedDir(root), "_manifest_", m.index,
+      "segments" -> m.segments.mkString(","),
+      "runs" -> renderRanges(m.ranges))
+
+  /** Target size of one segment file: a segment of `bytes` input is
+    * written as `ceil(bytes / SegmentTargetBytes)` files. */
+  private val SegmentTargetBytes: Long = 128L << 20
+
+  /** Segment sort keys: edge segments serve per-run and per-statement
+    * reads, read-log segments the `/reads?table=` and deprecation
+    * queries, which filter by table. */
+  private val EdgeSegmentKeys = Seq("run_id", "stmt")
+  private val ReadSegmentKeys = Seq("table_name", "ts_ms")
+
+  /** Write `df` as the segment at `path`, split into
+    * ~[[SegmentTargetBytes]] files range-partitioned and sorted on
+    * `keys` — ranges keep each file's leading-key span disjoint, so a
+    * filter on that key prunes FILES via footer stats, not just row
+    * groups within one giant file. */
+  private def writeSegment(df: DataFrame, path: String, bytes: Long,
+                           keys: Seq[String]): Unit = {
+    val nFiles = math.max(1L,
+      (bytes + SegmentTargetBytes - 1) / SegmentTargetBytes).toInt
+    df.repartitionByRange(nFiles, keys.map(col): _*)
+      .sortWithinPartitions(keys.map(col): _*)
+      .write.mode("overwrite")
+      .parquet(path)
   }
+
+  /** The tier merge both logs share: past `maxSegments`, the smallest
+    * segments of `dir` fold into one, bringing the count down to
+    * `max(1, maxSegments / 2)`. Returns (segments to merge with their
+    * bytes, segments to keep), or None under the threshold. */
+  private def mergePlan(filesystem: FileSystem, dir: Path,
+                        segments: Seq[String], maxSegments: Int)
+      : Option[(Seq[(String, Long)], Seq[String])] =
+    if (segments.size <= maxSegments) None
+    else {
+      val sized = segments.map { s =>
+        s -> filesystem.getContentSummary(new Path(dir, s)).getLength
+      }.sortBy(_._2)
+      val target = math.max(1, maxSegments / 2)
+      val (toMerge, toKeep) = sized.splitAt(sized.size - target + 1)
+      Some((toMerge, toKeep.map(_._1)))
+    }
 
   /** TIERED (LSM-style) compaction, r19 — VERDICT r18's top item: the
     * r18 version rewrote the ENTIRE folded history into one
@@ -1440,12 +1447,13 @@ object LineageStore {
     * millions-of-runs capture workload. Now each call folds ONLY the
     * new runs: live partition directories with id ≤ `upToRun` become
     * ONE new segment (prior segments untouched), sorted by
-    * (run_id, stmt) and range-partitioned into ~`targetSegmentBytes`
-    * files so per-run and per-statement reads prune on parquet
-    * row-group statistics instead of directories. Segments MERGE only
-    * when their count exceeds `maxSegments`: the smallest segments
-    * fold into one, bringing the count down to `maxSegments / 2`
-    * (hysteresis — the next merge is ~`maxSegments/2` compacts away).
+    * (run_id, stmt) and range-partitioned into ~128 MB files
+    * ([[SegmentTargetBytes]]) so per-run and per-statement reads prune
+    * on parquet row-group statistics instead of directories. Segments
+    * MERGE only when their count exceeds `maxSegments`: the smallest
+    * segments fold into one, bringing the count down to
+    * `maxSegments / 2` (hysteresis — the next merge is
+    * ~`maxSegments/2` compacts away).
     * Smallest-first merging means a byte is rewritten only when its
     * segment is among the small tier, i.e. O(log n) times over the
     * store's life, not once per call. `maxSegments = 1` reproduces
@@ -1493,16 +1501,13 @@ object LineageStore {
     * construction. */
   def compact(spark: SparkSession, storeDir: String, upToRun: Long,
               maxSegments: Int = 8,
-              targetSegmentBytes: Long = 128L << 20,
               cleanupGraceMs: Long = 0L): Seq[Long] =
     withMaintenance(spark, storeDir, "compact") {
-      compactImpl(spark, storeDir, upToRun, maxSegments,
-        targetSegmentBytes, cleanupGraceMs)
+      compactImpl(spark, storeDir, upToRun, maxSegments, cleanupGraceMs)
     }
 
   private def compactImpl(spark: SparkSession, storeDir: String,
                           upToRun: Long, maxSegments: Int,
-                          targetSegmentBytes: Long,
                           cleanupGraceMs: Long): Seq[Long] = {
     require(maxSegments >= 1, "maxSegments must be >= 1")
     val (filesystem, root) = fs(spark, storeDir)
@@ -1533,18 +1538,6 @@ object LineageStore {
     if (candidates.isEmpty && priorSegs.size <= maxSegments)
       return Seq.empty
     val ordered = (edgeCols :+ "run_id").map(col)
-    /** Write `df` as segment `name`, split into ~targetSegmentBytes
-      * files range-partitioned on (run_id, stmt) — ranges keep each
-      * file's run_id span disjoint, so a per-run filter prunes FILES
-      * via footer stats, not just row groups within one giant file. */
-    def writeSegment(df: DataFrame, name: String, bytes: Long): Unit = {
-      val nFiles = math.max(1L,
-        (bytes + targetSegmentBytes - 1) / targetSegmentBytes).toInt
-      df.repartitionByRange(nFiles, col("run_id"), col("stmt"))
-        .sortWithinPartitions("run_id", "stmt")
-        .write.mode("overwrite")
-        .parquet(s"$storeDir/_compacted/$name")
-    }
     var index = m.map(_.index).getOrElse(0)
     var segments = priorSegs
     // ——— phase A: fold the NEW runs into one new segment ———————————
@@ -1556,13 +1549,10 @@ object LineageStore {
         if (dataParts.isEmpty) Seq.empty // zero-edge folds: ids only
         else {
           writeSegment(
-            spark.read
-              .option("basePath", storeDir)
-              .parquet(dataParts.map(p =>
-                s"$storeDir/run_id=${p.id}"): _*)
-              .withColumn("run_id", col("run_id").cast("long"))
+            readPartitions(spark, storeDir, dataParts.map(_.id))
               .select(ordered: _*),
-            segName, dataParts.map(_.dataBytes).sum)
+            s"$storeDir/_compacted/$segName",
+            dataParts.map(_.dataBytes).sum, EdgeSegmentKeys)
           Seq(segName)
         }
       segments = segments ++ written
@@ -1579,13 +1569,8 @@ object LineageStore {
         new Path(compactedDir(root), s"_manifest_${old.index}"), false))
     }
     // ——— phase B: merge the smallest segments past the threshold ———
-    if (segments.size > maxSegments) {
-      val sized = segments.map { s =>
-        s -> filesystem.getContentSummary(
-          new Path(compactedDir(root), s)).getLength
-      }.sortBy(_._2)
-      val target = math.max(1, maxSegments / 2)
-      val (toMerge, toKeep) = sized.splitAt(sized.size - target + 1)
+    for ((toMerge, toKeep) <-
+         mergePlan(filesystem, compactedDir(root), segments, maxSegments)) {
       val prevIndex = index
       index += 1
       val mergedName = s"seg_$index"
@@ -1594,8 +1579,9 @@ object LineageStore {
           .parquet(toMerge.map(s =>
             s"$storeDir/_compacted/${s._1}"): _*)
           .select(ordered: _*),
-        mergedName, toMerge.map(_._2).sum)
-      segments = toKeep.map(_._1) :+ mergedName
+        s"$storeDir/_compacted/$mergedName", toMerge.map(_._2).sum,
+        EdgeSegmentKeys)
+      segments = toKeep :+ mergedName
       writeManifest(filesystem, root,
         Manifest(index, segments,
           mergeRanges(priorRanges, toRanges(candidates))))
@@ -1662,31 +1648,14 @@ object LineageStore {
     // outage for outage's sake (r20)
     val dir = readLogDir(root)
     val m = readRManifest(filesystem, root)
-    val consumed = m.map(_.consumed.toSet).getOrElse(Set.empty[String])
-    val children =
+    val pending =
       if (!filesystem.exists(dir)) Seq.empty
-      else filesystem.listStatus(dir).toSeq
+      else pendingReadUnits(filesystem, dir, m).map(_.getPath.toString)
     val segs = m.map(_.segments).getOrElse(Seq.empty)
       .map(s => new Path(dir, s))
       .filter(filesystem.exists)
       .map(_.toString)
-    val batches = children
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch_") &&
-        !consumed(st.getPath.getName))
-      .filter(st => filesystem.listStatus(st.getPath).exists { c =>
-        val n = c.getPath.getName
-        c.isFile && !n.startsWith("_") && !n.startsWith(".")
-      })
-      .map(_.getPath.toString) ++
-      // pre-batch-layout flushes wrote part files at the log root —
-      // same v1 contract, still readable (review r18)
-      children.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-          !consumed(n)
-      }.map(_.getPath.toString)
-    val inputs = segs ++ batches
+    val inputs = segs ++ pending
     if (inputs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], readLogSchema)
     else spark.read.parquet(inputs: _*)
@@ -1706,76 +1675,50 @@ object LineageStore {
   private def readLogDir(root: Path) = new Path(root, "_read_log")
 
   private def readRManifest(filesystem: FileSystem, root: Path)
-      : Option[RManifest] = {
-    val dir = readLogDir(root)
-    if (!filesystem.exists(dir)) None
-    else {
-      val named = filesystem.listStatus(dir).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith("_rmanifest_"))
-        .flatMap(n =>
-          n.stripPrefix("_rmanifest_").toIntOption.map(_ -> n))
-      named.sortBy(_._1).lastOption.map { case (k, name) =>
-        val in = filesystem.open(new Path(dir, name))
-        val text = try new String(in.readAllBytes(), "UTF-8")
-          finally in.close()
-        val fields = text.linesIterator
-          .map(_.split("\t", 2)).collect { case Array(a, b) => a -> b }
-          .toMap
-        RManifest(k,
-          fields.getOrElse("segments", "").split(",").toSeq
-            .filter(_.nonEmpty),
-          fields.getOrElse("consumed", "").split(",").toSeq
-            .filter(_.nonEmpty))
-      }
+      : Option[RManifest] =
+    readLatest(filesystem, readLogDir(root), "_rmanifest_").map {
+      case (k, fields) =>
+        RManifest(k, listField(fields, "segments"),
+          listField(fields, "consumed"))
     }
-  }
 
   private def writeRManifest(filesystem: FileSystem, root: Path,
-                             m: RManifest): Unit = {
-    val dir = readLogDir(root)
-    filesystem.mkdirs(dir)
-    val out = filesystem.create(
-      new Path(dir, s"_rmanifest_${m.index}"), true)
-    try out.write(
-      (s"segments\t${m.segments.mkString(",")}\n" +
-        s"consumed\t${m.consumed.mkString(",")}\n").getBytes("UTF-8"))
-    finally out.close()
+                             m: RManifest): Unit =
+    writeLatest(filesystem, readLogDir(root), "_rmanifest_", m.index,
+      "segments" -> m.segments.mkString(","),
+      "consumed" -> m.consumed.mkString(","))
+
+  /** The read log's PENDING units — the inputs the next
+    * [[compactReads]] folds: every `batch_<u>/` directory holding data
+    * that manifest `m` has not consumed, then the loose part files
+    * pre-batch-layout flushes wrote at the log root (same v1 contract,
+    * still readable; review r18). */
+  private def pendingReadUnits(filesystem: FileSystem, dir: Path,
+                               m: Option[RManifest]): Seq[FileStatus] = {
+    val consumed = m.map(_.consumed.toSet).getOrElse(Set.empty[String])
+    val children = filesystem.listStatus(dir).toSeq
+      .filterNot(st => consumed(st.getPath.getName))
+    children.filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith("batch_") &&
+        dataFiles(filesystem, st.getPath).nonEmpty) ++
+      children.filter(isDataFile)
   }
 
-  /** One consolidated read-log segment, range-partitioned on
-    * (table_name, ts_ms) into ~target-byte files — the `/reads?table=`
-    * and deprecation queries filter by table, so each file's
-    * table_name span stays disjoint and footer stats prune files. */
-  private def writeReadSegment(spark: SparkSession, dir: Path,
-                               inputs: Seq[String], name: String,
-                               bytes: Long, targetBytes: Long)
-      : Unit = {
-    val nFiles = math.max(1L,
-      (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inputs: _*)
-      .select(readLogCols.map(col): _*)
-      .repartitionByRange(nFiles, col("table_name"), col("ts_ms"))
-      .sortWithinPartitions("table_name", "ts_ms")
-      .write.mode("overwrite").parquet(new Path(dir, name).toString)
-  }
-
-  /** Data files directly under `p` (dir or single file). */
-  private def dataFilesUnder(filesystem: FileSystem, p: Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    val st = filesystem.getFileStatus(p)
-    if (st.isFile) Seq(st)
-    else filesystem.listStatus(p).toSeq.filter { c =>
-      val n = c.getPath.getName
-      c.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }
-  }
+  /** [[retireOrDelete]] for a read-log unit: loose legacy FILES can't
+    * hold a marker — they go immediately. */
+  private def retireReadUnit(filesystem: FileSystem, p: Path,
+                             marker: String, graceMs: Long): Unit =
+    if (filesystem.getFileStatus(p).isDirectory)
+      retireOrDelete(filesystem, p, marker, graceMs)
+    else { filesystem.delete(p, false); () }
 
   /** TIERED consolidation of the access log (r19, VERDICT r18 #2):
     * every flush since the last call — one `batch_<uuid>/` directory
     * each, plus any legacy root files — folds into ONE new `rseg_<k>`
-    * segment; segments merge (smallest first, count halved) only past
-    * `maxSegments`, exactly like [[compact]]'s write-side tiers.
+    * segment, sorted by (table_name, ts_ms) into ~128 MB files
+    * ([[SegmentTargetBytes]]); segments merge (smallest first, count
+    * halved) only past `maxSegments`, through the same merge plan as
+    * [[compact]]'s write-side tiers.
     * Without this, a year of sessions at 64-action flushes is tens of
     * thousands of directories that every `/reads` and `/deprecation`
     * call must list and open. Crash-safe: segment written first,
@@ -1784,11 +1727,9 @@ object LineageStore {
     * Returns the number of input units folded. */
   def compactReads(spark: SparkSession, storeDir: String,
                    maxSegments: Int = 8,
-                   targetSegmentBytes: Long = 128L << 20,
                    cleanupGraceMs: Long = 0L): Int =
     withMaintenance(spark, storeDir, "compactReads") {
-      compactReadsImpl(spark, storeDir, maxSegments,
-        targetSegmentBytes, cleanupGraceMs)
+      compactReadsImpl(spark, storeDir, maxSegments, cleanupGraceMs)
     }
 
   /** Consumed names the next manifest must KEEP carrying: under a
@@ -1804,7 +1745,6 @@ object LineageStore {
 
   private def compactReadsImpl(spark: SparkSession, storeDir: String,
                                maxSegments: Int,
-                               targetSegmentBytes: Long,
                                cleanupGraceMs: Long): Int = {
     require(maxSegments >= 1, "maxSegments must be >= 1")
     val (filesystem, root) = fs(spark, storeDir)
@@ -1812,35 +1752,15 @@ object LineageStore {
     if (!filesystem.exists(dir)) return 0
     val m = readRManifest(filesystem, root)
     val priorSegs = m.map(_.segments).getOrElse(Seq.empty)
-    val consumed = m.map(_.consumed.toSet).getOrElse(Set.empty[String])
     // sweep crash remnants and aged retirements: consumed-but-
     // undeleted inputs, rsegs no manifest references
-    m.foreach(_.consumed.foreach { n =>
-      val p = new Path(dir, n)
-      if (filesystem.exists(p)) {
-        val isDir = filesystem.getFileStatus(p).isDirectory
-        // loose legacy FILES can't hold a marker — they go immediately
-        if (isDir) retireOrDelete(filesystem, p, "_consumed",
-          cleanupGraceMs)
-        else { filesystem.delete(p, false); () }
-      }
-    })
+    m.foreach(_.consumed.map(new Path(dir, _)).filter(filesystem.exists)
+      .foreach(retireReadUnit(filesystem, _, "_consumed", cleanupGraceMs)))
     filesystem.listStatus(dir).toSeq.map(_.getPath.getName)
       .filter(n => n.startsWith("rseg_") && !priorSegs.contains(n))
       .foreach(n => retireOrDelete(filesystem, new Path(dir, n),
         "_retired", cleanupGraceMs))
-    val children = filesystem.listStatus(dir).toSeq
-    val inputs = children
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("batch_") &&
-        !consumed(st.getPath.getName) &&
-        dataFilesUnder(filesystem, st.getPath).nonEmpty)
-      .map(_.getPath) ++
-      children.filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".") &&
-          !consumed(n)
-      }.map(_.getPath)
+    val inputs = pendingReadUnits(filesystem, dir, m).map(_.getPath)
     var index = m.map(_.index).getOrElse(0)
     var segments = priorSegs
     // names this call's manifests must exclude: the prior manifest's
@@ -1853,36 +1773,34 @@ object LineageStore {
     if (inputs.nonEmpty) {
       index += 1
       val segName = s"rseg_$index"
-      writeReadSegment(spark, dir, inputs.map(_.toString), segName,
-        inputs.map(p =>
-          filesystem.getContentSummary(p).getLength).sum,
-        targetSegmentBytes)
+      writeSegment(
+        spark.read.parquet(inputs.map(_.toString): _*)
+          .select(readLogCols.map(col): _*),
+        new Path(dir, segName).toString,
+        inputs.map(p => filesystem.getContentSummary(p).getLength).sum,
+        ReadSegmentKeys)
       segments = segments :+ segName
       consumedAcc = (consumedAcc ++ inputs.map(_.getName)).distinct
       writeRManifest(filesystem, root,
         RManifest(index, segments, consumedAcc))
-      inputs.foreach(p =>
-        if (filesystem.getFileStatus(p).isDirectory)
-          retireOrDelete(filesystem, p, "_consumed", cleanupGraceMs)
-        else { filesystem.delete(p, false); () })
+      inputs.foreach(retireReadUnit(filesystem, _, "_consumed",
+        cleanupGraceMs))
       m.foreach(old => filesystem.delete(
         new Path(dir, s"_rmanifest_${old.index}"), false))
     }
-    if (segments.size > maxSegments) {
-      val sized = segments.map { s =>
-        s -> filesystem.getContentSummary(new Path(dir, s)).getLength
-      }.sortBy(_._2)
-      val target = math.max(1, maxSegments / 2)
-      val (toMerge, toKeep) = sized.splitAt(sized.size - target + 1)
+    for ((toMerge, toKeep) <-
+         mergePlan(filesystem, dir, segments, maxSegments)) {
       val prevIndex = index
       index += 1
       val mergedName = s"rseg_$index"
-      writeReadSegment(spark, dir,
-        toMerge.map(s => new Path(dir, s._1).toString), mergedName,
-        toMerge.map(_._2).sum, targetSegmentBytes)
+      writeSegment(
+        spark.read.parquet(toMerge.map(s => new Path(dir, s._1).toString): _*)
+          .select(readLogCols.map(col): _*),
+        new Path(dir, mergedName).toString, toMerge.map(_._2).sum,
+        ReadSegmentKeys)
       consumedAcc = (consumedAcc ++ toMerge.map(_._1)).distinct
       writeRManifest(filesystem, root,
-        RManifest(index, toKeep.map(_._1) :+ mergedName, consumedAcc))
+        RManifest(index, toKeep :+ mergedName, consumedAcc))
       toMerge.foreach(s => retireOrDelete(filesystem,
         new Path(dir, s._1), "_retired", cleanupGraceMs))
       filesystem.delete(
@@ -1924,48 +1842,22 @@ object LineageStore {
     val (filesystem, root) = fs(spark, storeDir)
     val dir = readLogDir(root)
     if (!filesystem.exists(dir)) return Seq.empty
-    if (filesystem.listStatus(dir).count { st =>
-          val n = st.getPath.getName
-          !n.startsWith("_") && !n.startsWith(".")
-        } > VacuumReadsConsolidateAbove)
+    if (filesystem.listStatus(dir).count(st => visible(st.getPath.getName))
+        > VacuumReadsConsolidateAbove)
       compactReadsImpl(spark, storeDir, maxSegments = 8,
-        targetSegmentBytes = targetBytesForVacuum,
         cleanupGraceMs = cleanupGraceMs)
     val m = readRManifest(filesystem, root)
-    val consumed = m.map(_.consumed.toSet).getOrElse(Set.empty[String])
     val segNames = m.map(_.segments).getOrElse(Seq.empty)
       .filter(s => filesystem.exists(new Path(dir, s)))
-    val children = filesystem.listStatus(dir).toSeq
-    val looseNames = children.collect {
-      case st if st.isDirectory &&
-          st.getPath.getName.startsWith("batch_") &&
-          !consumed(st.getPath.getName) &&
-          dataFilesUnder(filesystem, st.getPath).nonEmpty =>
-        st.getPath.getName
-      case st if st.isFile && !st.getPath.getName.startsWith("_") &&
-          !st.getPath.getName.startsWith(".") &&
-          !consumed(st.getPath.getName) =>
-        st.getPath.getName
-    }
+    val looseNames =
+      pendingReadUnits(filesystem, dir, m).map(_.getPath.getName)
     // footer-stats classification: (min ts, max ts) per unit
     def tsRange(name: String): Option[(Long, Long)] = {
       val hconf = spark.sessionState.newHadoopConf()
-      import scala.jdk.CollectionConverters._
-      val stats = dataFilesUnder(filesystem, new Path(dir, name))
-        .flatMap { f =>
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(f, hconf))
-          try reader.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
-            b.getColumns.asScala
-              .find(_.getPath.toDotString == "ts_ms")
-              .map(_.getStatistics)
-              .filter(s => s != null && !s.isEmpty)
-              .map(s => (s.genericGetMin.asInstanceOf[Number]
-                .longValue(), s.genericGetMax.asInstanceOf[Number]
-                .longValue()))
-          } finally reader.close()
-        }
+      val unit = filesystem.getFileStatus(new Path(dir, name))
+      val stats =
+        (if (unit.isFile) Seq(unit) else dataFiles(filesystem, unit.getPath))
+          .flatMap(f => footer(hconf, f, "ts_ms")._2.flatten)
       if (stats.isEmpty) None
       else Some((stats.map(_._1).min, stats.map(_._2).max))
     }
@@ -1988,18 +1880,12 @@ object LineageStore {
         val segName = s"rseg_$index"
         val bytes = straddling.map(n => filesystem
           .getContentSummary(new Path(dir, n)).getLength).sum
-        val nFiles = math.max(1L,
-          (bytes + targetBytesForVacuum - 1) / targetBytesForVacuum)
-          .toInt
-        spark.read.parquet(
-            straddling.map(n => new Path(dir, n).toString): _*)
-          .select(readLogCols.map(col): _*)
-          .filter(col("ts_ms") >= cutoff)
-          .repartitionByRange(nFiles,
-            col("table_name"), col("ts_ms"))
-          .sortWithinPartitions("table_name", "ts_ms")
-          .write.mode("overwrite")
-          .parquet(new Path(dir, segName).toString)
+        writeSegment(
+          spark.read.parquet(
+              straddling.map(n => new Path(dir, n).toString): _*)
+            .select(readLogCols.map(col): _*)
+            .filter(col("ts_ms") >= cutoff),
+          new Path(dir, segName).toString, bytes, ReadSegmentKeys)
         Seq(segName)
       }
     val removed = (wholly ++ straddling).toSet
@@ -2008,18 +1894,12 @@ object LineageStore {
         segNames.filterNot(removed) ++ rewritten,
         (liveConsumed(filesystem, dir, m) ++ removed.toSeq.sorted)
           .distinct))
-    removed.toSeq.sorted.foreach { n =>
-      val p = new Path(dir, n)
-      if (filesystem.getFileStatus(p).isDirectory)
-        retireOrDelete(filesystem, p,
-          if (n.startsWith("rseg_")) "_retired" else "_consumed",
-          cleanupGraceMs)
-      else { filesystem.delete(p, false); () }
-    }
+    removed.toSeq.sorted.foreach(n =>
+      retireReadUnit(filesystem, new Path(dir, n),
+        if (n.startsWith("rseg_")) "_retired" else "_consumed",
+        cleanupGraceMs))
     m.foreach(old => filesystem.delete(
       new Path(dir, s"_rmanifest_${old.index}"), false))
     removed.toSeq.sorted
   }
-
-  private val targetBytesForVacuum: Long = 128L << 20
 }
