@@ -467,11 +467,7 @@ object LineageCapture {
     * (the `_maintain` lease enforces it store-side; the executor just
     * avoids queueing up doomed lease contenders in one JVM). */
   private lazy val maintenanceExec =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-      val t = new Thread(r, "graft-lineage-autocompact")
-      t.setDaemon(true)
-      t
-    })
+    Lanes(1, _ => "graft-lineage-autocompact")
 
   /** Per (trigger conf key, store): events since the last trigger. */
   private val sinceMaintain = new java.util.concurrent

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression,
 import org.apache.spark.sql.catalyst.plans._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.internal.SQLConf
 
 /** Column-level SQL lineage over Spark's own analyzer output.
   *
@@ -50,17 +51,33 @@ object LineageParser {
   /** Parse one or more `;`-separated statements into lineage results.
     * Statements are indexed 1..n like the reference (`LineParser.java:99`).
     * A `USE db` statement re-qualifies later unqualified names.
-    * `metadata` resolves sink schemas (S11); None = the session catalog. */
+    * `metadata` resolves sink schemas (S11); None = the session catalog.
+    *
+    * The statements are analyzed concurrently, with the results of the
+    * reference's sequential fold. `USE` is the one dependency between
+    * statements, and it needs only the parsed plan: the SQL parse of
+    * every statement runs first, a walk over the parsed plans gives
+    * each statement its current db, and then the statements fold on
+    * [[Lanes.fanOut]]. A failing body throws what the sequential fold
+    * throws, the failure of its lowest-index failing statement. */
   def parse(spark: SparkSession, sql: String,
             metadata: Option[MetadataProvider] = None,
             includeControl: Boolean = false): Seq[LineageResult] = {
     val meta = metadata.getOrElse(new CatalogMetadataProvider(spark))
-    var db = DefaultDb
-    splitStatements(sql).zipWithIndex.map { case (stmt, i) =>
-      val r = parseStatement(spark, stmt, i + 1, db, Some(meta), includeControl)
-      if (r.operation == Operation.Use) db = r.outputTables.headOption.getOrElse(db)
-      r
+    val stmts = splitStatements(sql).toIndexedSeq
+    val plans = Lanes.fanOut(stmts.size) { i =>
+      try Right(sqlParse(spark, stmts(i), i + 1))
+      catch { case t: Throwable => Left(t) }
     }
+    // the statements before the first one that does not parse; that
+    // one fails the body once they have folded
+    val parsed = plans.takeWhile(_.isRight).collect { case Right(p) => p }
+    val dbs = parsed.scanLeft(DefaultDb)((db, p) => useNamespace(p).getOrElse(db))
+    val results = Lanes.fanOut(parsed.size) { i =>
+      fold(spark, parsed(i), i + 1, dbs(i), meta, includeControl)
+    }
+    plans.collectFirst { case Left(t) => t }.foreach(t => throw t)
+    results
   }
 
   /** Parse a LARGE statement population in parallel (r17): the scale
@@ -69,14 +86,14 @@ object LineageParser {
     * (DESIGN.md §1) means hours on one thread. Statement analysis is
     * driver-side by nature (it needs the session's analyzer — there is
     * nothing distributed to do: no data is read), but Spark supports
-    * concurrent queries on one session, so a fixed pool of threads
-    * shares the session and the (stateless) metadata provider.
-    * Measured: see DESIGN.md §1, "Bulk parsing".
+    * concurrent queries on one session, so up to `parallelism` workers
+    * of [[Lanes.fanOut]] share the session and the (stateless) metadata
+    * provider. Measured: see DESIGN.md §1, "Bulk parsing".
     *
-    * Contract: statements must be SELF-CONTAINED — cross-statement
-    * `USE db` threading is inherently sequential and is NOT applied
-    * (the realistic backfill source, a query log, records each
-    * statement with its db already resolved). Results keep input
+    * Contract: every statement is parsed against the default db and
+    * no `USE` is applied across them (the realistic backfill source, a
+    * query log, records each statement with its db already resolved;
+    * [[parse]] threads `USE` through one body). Results keep input
     * order; indices are 1-based positions. A statement that fails to
     * parse surfaces as a Left(index, message) so one bad log line
     * cannot void a million-statement backfill. */
@@ -86,23 +103,14 @@ object LineageParser {
                 includeControl: Boolean = false)
       : Seq[Either[(Int, String), LineageResult]] = {
     val meta = metadata.getOrElse(new CatalogMetadataProvider(spark))
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(math.max(1, parallelism))
-    try {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
-      val futs = statements.zipWithIndex.map { case (s, i) =>
-        Future(
-          try Right(parseStatement(spark, s, i + 1, DefaultDb,
-            Some(meta), includeControl))
-          catch { case e: Exception =>
-            Left((i + 1, Option(e.getMessage).getOrElse(e.getClass.getName)))
-          })
+    val stmts = statements.toIndexedSeq
+    Lanes.fanOut(stmts.size, math.max(1, parallelism)) { i =>
+      try Right(parseStatement(spark, stmts(i), i + 1, DefaultDb,
+        Some(meta), includeControl))
+      catch { case e: Exception =>
+        Left((i + 1, Option(e.getMessage).getOrElse(e.getClass.getName)))
       }
-      Await.result(Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
+    }
   }
 
   /** Lineage for a PROGRAMMATIC DataFrame pipeline (r13 stretch): the
@@ -340,12 +348,20 @@ object LineageParser {
 
   private val UniqueJoin = "(?i)\\bUNIQUEJOIN\\b".r
 
-  /** Lineage for a single statement. */
+  /** Lineage for a single statement: its SQL parse, then the fold. */
   def parseStatement(spark: SparkSession, stmt: String, index: Int,
                      currentDb: String = DefaultDb,
                      metadata: Option[MetadataProvider] = None,
-                     includeControl: Boolean = false): LineageResult = {
-    val meta = metadata.getOrElse(new CatalogMetadataProvider(spark))
+                     includeControl: Boolean = false): LineageResult =
+    fold(spark, sqlParse(spark, stmt, index), index, currentDb,
+      metadata.getOrElse(new CatalogMetadataProvider(spark)), includeControl)
+
+  /** The SQL parse of one statement. The lexer reads its flags
+    * (`spark.sql.ansi.doubleQuotedIdentifiers`, …) from `SQLConf.get`,
+    * which answers for the session active on the calling thread, so
+    * the parse runs under `spark`'s own conf. */
+  private def sqlParse(spark: SparkSession, stmt: String,
+                       index: Int): LogicalPlan = {
     // Hive's UNIQUEJOIN has no Spark SQL equivalent; the reference also
     // declares it unsupported (LineParser.java:248,288). Fail with a
     // named error instead of surfacing a generic parse failure.
@@ -353,7 +369,25 @@ object LineageParser {
       throw new UnsupportedOperationException(
         s"UNIQUEJOIN is not supported (statement $index): Hive UNIQUEJOIN " +
           "has no Spark SQL equivalent; rewrite as a FULL OUTER JOIN")
-    val parsed = spark.sessionState.sqlParser.parsePlan(stmt)
+    SQLConf.withExistingConf(spark.sessionState.conf)(
+      spark.sessionState.sqlParser.parsePlan(stmt))
+  }
+
+  /** The plan classes of `USE`. */
+  private val UsePlans = Set("SetCatalogAndNamespace", "SetNamespaceCommand")
+
+  /** The namespace a `USE` plan switches to; None for any other plan. */
+  private def useNamespace(plan: LogicalPlan): Option[String] =
+    if (!UsePlans(plan.getClass.getSimpleName)) None
+    else plan.collectFirst {
+      case u: UnresolvedNamespace => u.multipartIdentifier.mkString(SepDot)
+    }
+
+  /** The lineage of one parsed statement, with `currentDb` qualifying
+    * its unqualified names. */
+  private def fold(spark: SparkSession, parsed: LogicalPlan, index: Int,
+                   currentDb: String, meta: MetadataProvider,
+                   includeControl: Boolean): LineageResult = {
     def fill(n: String) = fillDb(n, currentDb)
 
     parsed match {
@@ -431,9 +465,9 @@ object LineageParser {
             ddl(other, Operation.Truncate, index, currentDb)
           case "LoadData" =>
             ddl(other, Operation.Load, index, currentDb)
-          case "SetCatalogAndNamespace" | "SetNamespaceCommand" =>
-            val ns = other.collectFirst { case u: UnresolvedNamespace => u.multipartIdentifier.mkString(SepDot) }
-            LineageResult(index, Operation.Use, Set.empty, ns.toSet, Nil)
+          case n if UsePlans(n) =>
+            LineageResult(index, Operation.Use, Set.empty,
+              useNamespace(other).toSet, Nil)
           case n if n.startsWith("Alter") || n.startsWith("Add") ||
                     n.startsWith("Rename") || n.startsWith("Replace") ||
                     (n.startsWith("Set") && n.contains("Table")) ||

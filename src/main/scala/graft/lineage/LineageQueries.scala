@@ -1815,8 +1815,7 @@ object LineageQueries {
     * pool: enough to hide the per-append write-job latency, not
     * enough to contend. Fails fast on the first append error. */
   private def parallelAppends(ids: Range)(append: Int => Unit): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, ids.size))
+    val pool = Lanes(math.min(4, ids.size), i => s"graft-lineage-append-$i")
     try {
       val fs = ids.map(i => pool.submit(
         new java.util.concurrent.Callable[Unit] {

@@ -2,8 +2,6 @@ package graft.lineage
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ExecutorService, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.SparkSession
@@ -46,17 +44,22 @@ import org.apache.spark.sql.SparkSession
   * open wire format (idempotent name-UUID runId).
   *
   * Concurrency: two lanes. The parse endpoints (`/fetch`, `/impact`,
-  * `/column-impact`, `/openlineage`, `/health`) run on a fixed pool
-  * with one thread per core: a parse touches only the analyzer, which
-  * is safe to share across threads, and `USE db` threads through each
-  * request's own statements, never through the session. Every store
-  * endpoint is handed to one store lane thread, so store operations
-  * still run one at a time, in arrival order, under the same
-  * lease/claim model; a long compaction holds up other store requests
-  * but no parse. Responses go out with TCP_NODELAY (see
-  * [[createServer]]), so a delayed-ACK client sees no ~40 ms stall
-  * between headers and body. A request body is read up to
-  * [[MaxRequestBytes]]; a larger one gets a named 413.
+  * `/column-impact`, `/openlineage`, `/health`) run on the JVM-wide
+  * parse pool ([[Lanes.parse]], one thread per core, shared by every
+  * started service): a parse touches only the analyzer, which is safe
+  * to share across threads, and `USE db` threads through each
+  * request's own statements, never through the session. A request's
+  * statements are analyzed concurrently ([[LineageParser.parse]]): the
+  * request thread works through them and idle pool threads help, so
+  * one client's multi-statement body uses the idle cores, while under
+  * load the helpers queue behind requests. Every store endpoint is
+  * handed to one store lane thread, so store operations still run one
+  * at a time, in arrival order, under the same lease/claim model; a
+  * long compaction holds up other store requests but no parse.
+  * Responses go out with TCP_NODELAY (see [[createServer]]), so a
+  * delayed-ACK client sees no ~40 ms stall between headers and body.
+  * A request body is read up to [[MaxRequestBytes]]; a larger one gets
+  * a named 413.
   *
   * `start(port = 0)` binds an ephemeral port (tests);
   * `server.getAddress.getPort` reports the bound port. Callers own the
@@ -80,20 +83,6 @@ object LineageService {
     HttpServer.create(new InetSocketAddress(host, port), 0)
   }
 
-  /** `threads` daemon threads named `name(i)`, fed from an unbounded
-    * queue; a thread idle for a minute exits. */
-  private def lane(threads: Int, name: Int => String): ExecutorService = {
-    val made = new AtomicInteger()
-    val pool = new ThreadPoolExecutor(threads, threads, 1, TimeUnit.MINUTES,
-      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
-        val t = new Thread(r, name(made.getAndIncrement()))
-        t.setDaemon(true)
-        t
-      })
-    pool.allowCoreThreadTimeOut(true)
-    pool
-  }
-
   def start(spark: SparkSession, port: Int = 0,
             metadata: Option[MetadataProvider] = None,
             store: Option[String] = None,
@@ -115,7 +104,7 @@ object LineageService {
     // every store endpoint goes through this one wrapper: the exchange
     // is handed to the single store-lane thread, which checks the
     // token and runs the handler there, one store request at a time
-    val storeLane = lane(1, _ => "graft-lineage-store")
+    val storeLane = Lanes(1, _ => "graft-lineage-store")
     def onStore(ex: HttpExchange)(body: => Unit): Unit =
       storeLane.execute(() => LineageService.guardedAuth(ex, tok)(body))
     // local shadow threads the token through the parse handlers
@@ -455,8 +444,7 @@ object LineageService {
             schemaOf = t => meta.tableColumns(t))
             .mkString("[", ",", "]"))
       })
-    server.setExecutor(lane(Runtime.getRuntime.availableProcessors(),
-      i => s"graft-lineage-parse-$i"))
+    server.setExecutor(Lanes.parse)
     server.start()
     server
   }
